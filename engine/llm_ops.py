@@ -1143,7 +1143,9 @@ def q_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering, diversity sampling, and label propagation.
 
     Scale shape: the label block bounds each join cell (the unblocked
-    scale path is the IVF coarse quantizer, q_sim_topk_ivf); cosine is
+    scale path is the IVF coarse quantizer, q_sim_topk_ivf), and since
+    no edge crosses a label it also bounds q_graph_pagerank's fixpoint
+    over this graph to one grouped pass per label; cosine is
     a codegen zip_with/aggregate fold (no Python); per-node top-k runs
     as a rank window partitioned by vec_id — WindowGroupLimit pushes
     the k=3 cut below the sort. Ranking uses the ROUNDED cosine with

@@ -1356,70 +1356,72 @@ def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(
-    nodes: DataFrame, edges: DataFrame, id_col: str, rounds: int = 5, d: float = 0.85
-) -> DataFrame:
-    """PageRank by power iteration over a directed edge list — the
-    second iterative-fixpoint capability beside
-    :func:`connected_components`, and the authority signal used to
-    weight training documents by graph centrality.
+def pagerank(nodes: DataFrame, edges: DataFrame, id_col: str, block_col: str,
+             rounds: int = 5, d: float = 0.85) -> DataFrame:
+    """PageRank by power iteration over a directed edge list (src, dst
+    in its first two columns) — the authority signal used to weight
+    training documents by graph centrality.
 
-    Scale shape per round: one join (edges × current ranks on src — the
-    rank table is one row per NODE, broadcast-able when nodes ≪ edges)
-    and one hash aggregate on dst; ranks are ``localCheckpoint``-ed
-    each round so round N never replays rounds 1..N-1 and the plan
-    stays constant-size. No driver-side state at all (the loop is a
-    fixed round count, not a convergence collect). Dangling nodes are
-    the caller's concern (a kNN edge set has uniform out-degree k, so
-    none exist).
+    Scale shape: the block bounds the fixpoint as it bounds the kNN
+    pair join (a label-blocked graph has no edge across labels).
+    ``nodes`` (``id_col``, ``block_col``) is left-joined to its
+    out-edges on src, so edgeless nodes keep a row, and one
+    ``groupBy(block).applyInPandas`` runs every round over one block in
+    numpy: one lazy plan, one shuffle, no Spark job while the frame is
+    built. An edge leaving its block raises ``ValueError`` in the worker
+    (a ``PythonException`` at execution), never a silent wrong rank.
 
-    Ranks are carried as EXACT BIGINT pico-units (rank × 10¹²) with
-    integer division everywhere (contribution = qr div outdeg; damping
-    = (dn·in_sum) div 100 with dn = 100d), so every round is
-    order-independent and bit-identical on any engine — this is what
-    makes the 5-round fixpoint ORACLE-CHECKABLE (r5; previously
-    rows-only: a float power iteration sums contributions in
-    nondeterministic order). Truncation error vs the float recursion
-    is ≤ indeg·rounds pico-units (~1e-10), far inside the float test
-    tolerance and the round(4) output contract."""
+    Ranks are EXACT int64 pico-units (rank × 10¹²) with floor division
+    (contribution = qr // outdeg; damping = (dn·in_sum) // 100, dn =
+    100d; operands are non-negative, so ``//`` is SQL ``div``): every
+    round is order-independent and bit-identical to the DuckDB oracle.
+    A block's total rank stays ≤ nodes·10¹², so dn·in_sum fits int64 up
+    to about 1e5 nodes per block (a larger block raises ``ValueError``)
+    — the B² pair join of a kNN block is infeasible long before that."""
     scale = 10**12
     dn = int(round(d * 100))
     teleport = (100 - dn) * (scale // 100)
-    e = edges.select(
-        F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst")
-    ).localCheckpoint()
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint()
-    ranks = nodes.select(
-        F.col(id_col).alias("node"), F.lit(scale).cast("long").alias("qr")
+
+    def block_ranks(key, pdf):
+        import numpy as np
+        import pandas as pd
+
+        src, has = pdf["node"].to_numpy(np.int64), pdf["out"].to_numpy(bool)
+        ids, dst = np.unique(src), pdf["dst"].to_numpy(np.int64)[has]
+        if len(ids) * dn * scale > np.iinfo(np.int64).max:
+            raise ValueError(f"pagerank: block {key[0]!r} has {len(ids)} nodes, "
+                             "past the int64 rank bound")
+        s, t = np.searchsorted(ids, src[has]), np.searchsorted(ids, dst)
+        bad = ids[np.minimum(t, len(ids) - 1)] != dst
+        if bad.any():
+            raise ValueError(f"pagerank: edge dst {dst[bad][0]} is outside block "
+                             f"{key[0]!r}")
+        outdeg = np.bincount(s, minlength=len(ids))
+        qr = np.full(len(ids), scale, dtype=np.int64)
+        for _ in range(rounds):
+            in_sum = np.zeros(len(ids), dtype=np.int64)
+            np.add.at(in_sum, t, qr[s] // outdeg[s])
+            qr = teleport + (dn * in_sum) // 100
+        return pd.DataFrame({"node": ids, "qr": qr})
+
+    a, b = edges.columns[:2]
+    e = edges.select(F.col(a).alias("node"), F.col(b).alias("dst"))
+    return (
+        nodes.select(F.col(id_col).alias("node"), block_col)
+        .join(e, "node", "left")
+        .select("node", block_col, F.col("dst").isNotNull().alias("out"),
+                F.coalesce("dst", "node").alias("dst"))
+        .groupBy(block_col)
+        .applyInPandas(block_ranks, "node long, qr long")
+        .select("node", (F.col("qr") / scale).alias("rank"), "qr")
     )
-    for _ in range(rounds):
-        contrib = (
-            e.join(deg, "src")
-            .join(ranks.select(F.col("node").alias("src"), "qr"), "src")
-            .select("dst", F.expr("qr div outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").cast("long").alias("in_sum"))
-        )
-        ranks = (
-            nodes.select(F.col(id_col).alias("node"))
-            .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(teleport).cast("long")
-                    + F.expr(f"({dn} * coalesce(in_sum, CAST(0 AS BIGINT))) div 100")
-                ).alias("qr"),
-            )
-            .localCheckpoint()
-        )
-    return ranks.select("node", (F.col("qr") / scale).alias("rank"), "qr")
 
 
 def _pagerank_oracle() -> str:
     """Unrolled 5-round quantized PageRank as a single DuckDB
     statement: the kNN-edge CTEs (verbatim from KNN_ORACLE) feed five
-    chained round CTEs running the EXACT integer recurrence the Spark
-    loop runs (qr // outdeg contributions, (85·Σ) // 100 damping) —
+    chained round CTEs running the EXACT integer recurrence the engine's
+    block pass runs (qr // outdeg contributions, (85·Σ) // 100 damping) —
     a fixed round count needs no recursion, so the 'iterative
     fixpoint has no SQL oracle' excuse died with the float
     arithmetic."""
@@ -1458,19 +1460,15 @@ def _pagerank_oracle() -> str:
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (5 rounds, d=0.85) over the label-blocked k=3 cosine
     kNN graph of the embeddings table — document-authority scoring on
-    the semantic neighbourhood graph. Exactness vs a single-process
-    numpy power iteration is asserted in tests/test_pipeline.py (same
-    rounds, same damping, 1e-6 tolerance) AND, since r5, against a
-    full DuckDB oracle: the quantized-integer recurrence (see
-    :func:`pagerank`) is order-independent, so the 5 rounds unroll
-    into five chained CTEs and hash-match exactly — this key was
-    rows-only in r4 purely because float contribution sums are
-    order-nondeterministic."""
+    the semantic neighbourhood graph. No kNN edge crosses a label, so
+    :func:`pagerank` blocks on it. Exactness vs a float power iteration
+    is asserted in tests/test_pipeline.py; the integer recurrence
+    hash-matches the DuckDB oracle's five unrolled round CTEs."""
     from engine.llm_ops import q_embed_knn
 
     e = _t(spark, sf_dir, "embeddings")
     edges = q_embed_knn(spark, sf_dir).select("vec_id", "neighbor_id")
-    ranks = pagerank(e.select("vec_id"), edges, "vec_id", rounds=5)
+    ranks = pagerank(e.select("vec_id", "label"), edges, "vec_id", "label", rounds=5)
     return (
         ranks.select(
             F.col("node").alias("vec_id"), F.round("rank", 4).alias("rank"), "qr"

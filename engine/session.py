@@ -55,7 +55,20 @@ def tune(spark: SparkSession) -> SparkSession:
     Best-effort for perf confs (warn on failure); hard-verified for the
     confs the DuckDB differential comparison depends on (timezone) —
     a session that cannot take those would produce wrong-looking
-    'correctness' diffs, which must be an error, not a mystery."""
+    'correctness' diffs, which must be an error, not a mystery.
+
+    Also puts the directory holding ``engine`` on every Python worker's
+    path (Spark merges ``environment["PYTHONPATH"]`` into it): UDFs and
+    data sources defined in ``engine`` unpickle by module reference, so
+    a worker started from any other cwd would fail with ``No module
+    named 'engine'``."""
+    import engine
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(engine.__file__)))
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([root, *paths])
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)

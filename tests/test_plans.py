@@ -708,3 +708,23 @@ def test_r5_operator_plan_shapes(plans):
     # is the map-only codegen projection — no Exchange, no Python
     pca = plans["q_embed_pca"]
     assert "Exchange" not in pca, "PCA projection should be map-only"
+
+
+def test_pagerank_is_one_lazy_grouped_pass(spark):
+    """Building q_graph_pagerank's frame launches no Spark job (the old
+    per-round checkpoint loop launched ~50), and the executed plan runs
+    the whole fixpoint as one grouped-pandas node. Counts, not walls,
+    so the guard holds on any host."""
+    sc = spark.sparkContext
+    group = "test_plans:q_graph_pagerank:build"
+    sc.setJobGroup(group, "build only")
+    try:
+        df = all_queries()["q_graph_pagerank"](spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert len(df.collect()) == 20
+    # AQE prints the final plan above the initial one; count the final
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1, plan

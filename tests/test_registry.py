@@ -226,3 +226,33 @@ def test_rows_only_set_is_frozen():
         f"converted-or-lost={sorted(_ROWS_ONLY_FROZEN - rows_only)} — "
         "amend SURVEY.md §2.12b and this freeze together"
     )
+
+
+def test_python_workers_import_engine_from_any_cwd(tmp_path):
+    """Python workers must import ``engine`` when the driver runs from
+    an unrelated cwd with no PYTHONPATH: the session adds the package's
+    parent directory to the workers' path."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import SF_SMOKE
+
+    script = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from engine.registry import all_queries\n"
+        "from engine.session import get_spark\n"
+        "spark, qs = get_spark('cwd-probe'), all_queries()\n"
+        "for k in ('q_source_python', 'q_graph_pagerank'):\n"
+        "    print(k, qs[k](spark, sys.argv[2]).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.setdefault("ENGINE_DRIVER_MEM", "2g")
+    out = subprocess.run(
+        [sys.executable, "-c", script, str(REPO), SF_SMOKE],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    lines = out.stdout.split("\n")
+    assert "q_graph_pagerank 20" in lines
+    assert any(x.startswith("q_source_python ") for x in lines)
