@@ -23,12 +23,14 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.io import load_table
+from engine.kernels import knn_block, knn_frame
 from engine.registry import register
 
 STOPWORDS = ("the", "a", "of", "and", "to")
@@ -1136,59 +1138,54 @@ KNN_ORACLE = """
     """
 
 
+def label_blocks(spark: SparkSession, sf_dir: str, per_block, schema: str) -> DataFrame:
+    """One ``groupBy("label").applyInPandas`` over ``embeddings``:
+    ``per_block(ids, edges)`` gets a label block's vec_ids and its
+    :func:`knn_block` edges and returns the block's pandas frame of
+    ``schema``. A NULL label gets no edges (the label equi-join it
+    replaces dropped NULLs), and a NULL vec_id is never a node.
+
+    A vector with a NULL element is passed as a NULL vector: both NULL
+    every cosine they meet, and pandas would read a NULL element as NaN,
+    which must keep its own meaning (a NaN cosine, ranked first)."""
+    emb = F.when(F.exists("embedding", lambda x: x.isNull()), F.lit(None)).otherwise(
+        F.col("embedding")
+    )
+
+    def block(key, pdf):
+        ids = pdf["vec_id"].to_numpy(np.int64)
+        if pd.isna(key[0]):
+            return per_block(ids, knn_block(ids[:0], []))
+        return per_block(ids, knn_block(ids, pdf["embedding"]))
+
+    return (
+        _t(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id").isNotNull())
+        .select("vec_id", "label", emb.alias("embedding"))
+        .groupBy("label")
+        .applyInPandas(block, schema)
+    )
+
+
 @register("q_embed_knn", oracle=KNN_ORACLE)
 def q_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN graph construction (k=3 cosine neighbours per vector,
     blocked by label) — the neighbourhood graph behind semantic dedup
     clustering, diversity sampling, and label propagation.
 
-    Scale shape: the label block bounds each join cell (the unblocked
+    Scale shape: the label block bounds each pair cell (the unblocked
     scale path is the IVF coarse quantizer, q_sim_topk_ivf), and since
-    no edge crosses a label it also bounds q_graph_pagerank's fixpoint
-    over this graph to one grouped pass per label; cosine is
-    a codegen zip_with/aggregate fold (no Python); per-node top-k runs
-    as a rank window partitioned by vec_id — WindowGroupLimit pushes
-    the k=3 cut below the sort. Ranking uses the ROUNDED cosine with
-    neighbor_id tiebreak so rank order is reproducible cross-engine
-    (near-equal float ranks would otherwise flip on 1-ulp noise)."""
-    e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    # norms precompute ONCE PER VECTOR before the join — folding them
-    # per pair would redo an O(dim) aggregate 2(B-1) times per vector
-    # inside each label block (O(B²·d) wasted vs O(B·d))
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("emb"), lambda x: x * x),
-            F.lit(0.0),
-            lambda a_, x: a_ + x,
-        )
-    )
-    e2 = e.select("vec_id", "label", as_double.alias("emb")).withColumn(
-        "nrm", norm
-    )
-    a, b = e2.alias("a"), e2.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.emb"), F.col("b.emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos_r = F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 4) + 0.0
-    pairs = a.join(
-        b,
-        (F.col("a.label") == F.col("b.label"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_id"),
-        F.col("b.vec_id").alias("neighbor_id"),
-        cos_r.alias("cosine"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("vec_id", "neighbor_id", "cosine", "rank")
+    no edge crosses a label it also bounds q_graph_pagerank to one
+    grouped pass per label. One shuffle on label, then the grouped
+    pandas task runs :func:`knn_block` once per block in numpy: the
+    chunked B×B cosine fold and the per-node top-3 — no self-join, no
+    interpreted ``zip_with``/``aggregate`` fold, no rank window. Ranking
+    uses the ROUNDED cosine with neighbor_id tiebreak so rank order is
+    reproducible cross-engine (near-equal float ranks would otherwise
+    flip on 1-ulp noise)."""
+    return label_blocks(
+        spark, sf_dir, knn_frame,
+        "vec_id long, neighbor_id long, cosine double, rank int",
     )
 
 

@@ -20,10 +20,14 @@ microseconds (``unix_micros`` == ``epoch_us``; the events fixture is
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.io import load_table
+from engine.kernels import PR_SCALE, rank_block
 from engine.registry import register
 
 SPLIT_BUCKETS = 100
@@ -1363,45 +1367,19 @@ def pagerank(nodes: DataFrame, edges: DataFrame, id_col: str, block_col: str,
     training documents by graph centrality.
 
     Scale shape: the block bounds the fixpoint as it bounds the kNN
-    pair join (a label-blocked graph has no edge across labels).
+    pair fold (a label-blocked graph has no edge across labels).
     ``nodes`` (``id_col``, ``block_col``) is left-joined to its
     out-edges on src, so edgeless nodes keep a row, and one
-    ``groupBy(block).applyInPandas`` runs every round over one block in
-    numpy: one lazy plan, one shuffle, no Spark job while the frame is
-    built. An edge leaving its block raises ``ValueError`` in the worker
-    (a ``PythonException`` at execution), never a silent wrong rank.
-
-    Ranks are EXACT int64 pico-units (rank × 10¹²) with floor division
-    (contribution = qr // outdeg; damping = (dn·in_sum) // 100, dn =
-    100d; operands are non-negative, so ``//`` is SQL ``div``): every
-    round is order-independent and bit-identical to the DuckDB oracle.
-    A block's total rank stays ≤ nodes·10¹², so dn·in_sum fits int64 up
-    to about 1e5 nodes per block (a larger block raises ``ValueError``)
-    — the B² pair join of a kNN block is infeasible long before that."""
-    scale = 10**12
-    dn = int(round(d * 100))
-    teleport = (100 - dn) * (scale // 100)
+    ``groupBy(block).applyInPandas`` runs every round of
+    :func:`rank_block` over one block: one lazy plan, one shuffle, no
+    Spark job while the frame is built. A broken block precondition
+    raises ``ValueError`` in the worker (a ``PythonException`` at
+    execution)."""
 
     def block_ranks(key, pdf):
-        import numpy as np
-        import pandas as pd
-
         src, has = pdf["node"].to_numpy(np.int64), pdf["out"].to_numpy(bool)
-        ids, dst = np.unique(src), pdf["dst"].to_numpy(np.int64)[has]
-        if len(ids) * dn * scale > np.iinfo(np.int64).max:
-            raise ValueError(f"pagerank: block {key[0]!r} has {len(ids)} nodes, "
-                             "past the int64 rank bound")
-        s, t = np.searchsorted(ids, src[has]), np.searchsorted(ids, dst)
-        bad = ids[np.minimum(t, len(ids) - 1)] != dst
-        if bad.any():
-            raise ValueError(f"pagerank: edge dst {dst[bad][0]} is outside block "
-                             f"{key[0]!r}")
-        outdeg = np.bincount(s, minlength=len(ids))
-        qr = np.full(len(ids), scale, dtype=np.int64)
-        for _ in range(rounds):
-            in_sum = np.zeros(len(ids), dtype=np.int64)
-            np.add.at(in_sum, t, qr[s] // outdeg[s])
-            qr = teleport + (dn * in_sum) // 100
+        ids = np.unique(src)
+        qr = rank_block(ids, src[has], pdf["dst"].to_numpy(np.int64)[has], rounds, d)
         return pd.DataFrame({"node": ids, "qr": qr})
 
     a, b = edges.columns[:2]
@@ -1413,7 +1391,7 @@ def pagerank(nodes: DataFrame, edges: DataFrame, id_col: str, block_col: str,
                 F.coalesce("dst", "node").alias("dst"))
         .groupBy(block_col)
         .applyInPandas(block_ranks, "node long, qr long")
-        .select("node", (F.col("qr") / scale).alias("rank"), "qr")
+        .select("node", (F.col("qr") / PR_SCALE).alias("rank"), "qr")
     )
 
 
@@ -1461,18 +1439,22 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (5 rounds, d=0.85) over the label-blocked k=3 cosine
     kNN graph of the embeddings table — document-authority scoring on
     the semantic neighbourhood graph. No kNN edge crosses a label, so
-    :func:`pagerank` blocks on it. Exactness vs a float power iteration
-    is asserted in tests/test_pipeline.py; the integer recurrence
-    hash-matches the DuckDB oracle's five unrolled round CTEs."""
-    from engine.llm_ops import q_embed_knn
+    one ``groupBy("label").applyInPandas`` over ``embeddings`` builds
+    each block's edges (``knn_block``) and runs every round
+    (:func:`rank_block`) in the same Python task: one scan, one
+    exchange, no join. Exactness vs a float power iteration is asserted
+    in tests/test_pipeline.py; the integer recurrence hash-matches the
+    DuckDB oracle's five unrolled round CTEs."""
+    from engine.llm_ops import label_blocks
 
-    e = _t(spark, sf_dir, "embeddings")
-    edges = q_embed_knn(spark, sf_dir).select("vec_id", "neighbor_id")
-    ranks = pagerank(e.select("vec_id", "label"), edges, "vec_id", "label", rounds=5)
+    def ranks(ids, edges):
+        nodes = np.unique(ids)
+        return pd.DataFrame({"node": nodes, "qr": rank_block(nodes, edges[0], edges[1], rounds=5)})
+
     return (
-        ranks.select(
-            F.col("node").alias("vec_id"), F.round("rank", 4).alias("rank"), "qr"
-        )
+        label_blocks(spark, sf_dir, ranks, "node long, qr long")
+        .select(F.col("node").alias("vec_id"),
+                F.round(F.col("qr") / PR_SCALE, 4).alias("rank"), "qr")
         .orderBy(F.desc("qr"), F.asc("vec_id"))
         .limit(20)
         .drop("qr")

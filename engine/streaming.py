@@ -247,7 +247,11 @@ def _run_to_memory(
     finally:
         q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    out = spark.table(name)
+    # The frame keeps the sink's resolved plan; the view would only leak
+    # one catalog entry per replay for the life of the session.
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @register(

@@ -506,10 +506,13 @@ def test_r4_operator_plan_shapes(plans):
     # boilerplate: the common-gram table is small by construction and
     # must reach the positions join as a broadcast
     assert "BroadcastHashJoin" in plans["q_text_boilerplate"]
-    # kNN graph: per-node top-k lowers to WindowGroupLimit (rank cut
-    # below the sort), and the label block is a real equi-join
+    # kNN graph: the pair fold and per-node top-k run in one grouped-
+    # pandas task per label block, over exactly one label shuffle
     knn = plans["q_embed_knn"]
-    assert "WindowGroupLimit" in knn
+    tree = knn.split("== Physical Plan ==")[-1].split("(1) ")[0]
+    assert tree.count("FlatMapGroupsInPandas") == 1, tree
+    assert tree.count("Exchange") == 1, tree
+    assert re.search(r"hashpartitioning\(label#\d+, \d+\)", knn), knn
     assert "NestedLoop" not in knn and "Cartesian" not in knn
     # count-min: the 256-row sketch broadcasts; top-10 is a heap, not a
     # global sort
@@ -713,8 +716,9 @@ def test_r5_operator_plan_shapes(plans):
 def test_pagerank_is_one_lazy_grouped_pass(spark):
     """Building q_graph_pagerank's frame launches no Spark job (the old
     per-round checkpoint loop launched ~50), and the executed plan runs
-    the whole fixpoint as one grouped-pandas node. Counts, not walls,
-    so the guard holds on any host."""
+    the kNN edge build and the whole fixpoint as one grouped-pandas
+    node over one shuffle, with no join and no window. Counts, not
+    walls, so the guard holds on any host."""
     sc = spark.sparkContext
     group = "test_plans:q_graph_pagerank:build"
     sc.setJobGroup(group, "build only")
@@ -728,3 +732,5 @@ def test_pagerank_is_one_lazy_grouped_pass(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("FlatMapGroupsInPandas") == 1, plan
+    assert final.count("Exchange") == 1, plan
+    assert "Join" not in final and "Window" not in final, plan

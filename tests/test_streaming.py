@@ -27,6 +27,15 @@ def test_tumbling_stream_equals_batch(spark):
     assert batch.exceptAll(out).count() == 0
 
 
+def test_memory_sink_views_do_not_leak(spark):
+    """Each replay drops its memory-sink view once its frame is
+    resolved; the frames still read the sinks' rows."""
+    q = all_queries()["q_stream_tumbling"]
+    a, b = q(spark, SF_SMOKE), q(spark, SF_SMOKE)
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")]
+    assert a.collect() and sorted(a.collect()) == sorted(b.collect())
+
+
 def test_stateful_totals_equal_batch_group(spark):
     out = all_queries()["q_stream_stateful"](spark, SF_SMOKE)
     ev = load_table(spark, SF_SMOKE, "events")
