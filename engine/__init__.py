@@ -15,9 +15,17 @@ Design (SURVEY.md §1.2, §3, §4):
   an ANSI-SQL oracle for DuckDB differential testing where expressible.
 
 Import :func:`engine.registry.all_queries` to obtain the full surface.
+
+This module imports no pyspark: Python workers start as
+``python -m engine.worker_daemon``, which imports this package before it
+can take Spark's archives off ``sys.path``.
 """
 
-from engine import registry as registry  # re-export for convenience
+import os
+
+# The directory holding the ``engine`` package; scratch files live under
+# ``ROOT/.tmp``.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def load_all() -> None:

@@ -9,7 +9,7 @@ the original parquet — so a value-corrupting roundtrip (encoding,
 schema drift, partition mishandling) breaks the hash, not just a unit
 test.
 
-Sinks land under /root/repo/.tmp/io/<key>-<fingerprint>; the
+Sinks land under <repo root>/.tmp/io/<key>-<fingerprint>; the
 fingerprint is the sf_dir basename, so concurrent checks at different
 SFs never collide and re-runs overwrite deterministically.
 """
@@ -28,10 +28,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from engine import ROOT
 from engine.io import load_table, read_csv, read_json
 from engine.registry import register
 
-_TMP = "/root/repo/.tmp/io"
+_TMP = f"{ROOT}/.tmp/io"
 
 
 def _sink(key: str, sf_dir: str) -> str:

@@ -21,6 +21,8 @@ import warnings
 
 from pyspark.sql import SparkSession
 
+from engine import ROOT
+
 # Runtime-settable confs (safe to apply to an externally built session).
 RUNTIME_CONF = {
     # Deterministic timestamp semantics vs the DuckDB oracle: fixture
@@ -62,13 +64,10 @@ def tune(spark: SparkSession) -> SparkSession:
     data sources defined in ``engine`` unpickle by module reference, so
     a worker started from any other cwd would fail with ``No module
     named 'engine'``."""
-    import engine
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(engine.__file__)))
     env = spark.sparkContext.environment
     paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
-    if root not in paths:
-        env["PYTHONPATH"] = os.pathsep.join([root, *paths])
+    if ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([ROOT, *paths])
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
@@ -86,14 +85,31 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM in whole GiB, at least 1g and at most 24g."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, ram >> 31))}g"
+
+
 def get_spark(app_name: str = "engine") -> SparkSession:
-    """Build (or fetch) the shared local SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) the shared local SparkSession.
+
+    Sized from the host unless ``SPARK_GRAFT_CPUS`` / ``ENGINE_DRIVER_MEM``
+    say otherwise: one thread per CPU this process may run on, and a
+    driver heap of half the physical RAM, capped at 24g.
+
+    Its Python workers start from :mod:`engine.worker_daemon`, which
+    imports the installed pyspark instead of Spark's archives (a
+    builder-time conf, so not in :data:`RUNTIME_CONF`). The external
+    driver's vanilla session keeps Spark's default daemon; its results
+    are the same, each Python task just pays the archive re-read."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("ENGINE_DRIVER_MEM", "24g"))
-        .config("spark.sql.warehouse.dir", "/root/repo/.tmp/spark-warehouse")
+        .config("spark.driver.memory", os.environ.get("ENGINE_DRIVER_MEM") or _default_driver_mem())
+        .config("spark.sql.warehouse.dir", os.path.join(ROOT, ".tmp", "spark-warehouse"))
+        .config("spark.python.daemon.module", "engine.worker_daemon")
         .config("spark.ui.enabled", "false")
         # Console progress writes \r-partial lines that splice into
         # check.py's per-key [OK]/[FAIL] output and break log grepping

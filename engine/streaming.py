@@ -42,10 +42,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from engine import ROOT
 from engine.registry import register
 from engine.session import tune
 
-_TMP = "/root/repo/.tmp/stream"
+_TMP = f"{ROOT}/.tmp/stream"
 N_SLICES = 8
 
 EVENT_SCHEMA = StructType(
@@ -215,7 +216,7 @@ def _run_to_memory(
     below makes a future tune()/default change fail loud here, not
     as a mystery differential diff."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = f"/root/repo/.tmp/ckpt/{name}"
+    ckpt = f"{ROOT}/.tmp/ckpt/{name}"
     spark = stream_df.sparkSession
     n_parts = partitions or os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "2")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -937,7 +938,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["v"] = bid
 
     name = f"cdc_{uuid.uuid4().hex[:10]}"
-    ckpt = f"/root/repo/.tmp/ckpt/{name}"
+    ckpt = f"{ROOT}/.tmp/ckpt/{name}"
     # Invariance (r16 coarsening): the per-batch fold is
     # latest-per-key by max_by over the TOTAL order (us, event_id) —
     # an associative, commutative reduce — and every batch merges the
