@@ -108,7 +108,7 @@ def get_spark(app_name: str = "engine") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.driver.memory", os.environ.get("ENGINE_DRIVER_MEM") or _default_driver_mem())
-        .config("spark.sql.warehouse.dir", os.path.join(ROOT, ".tmp", "spark-warehouse"))
+        .config("spark.sql.warehouse.dir", f"{ROOT}/.tmp/spark-warehouse")
         .config("spark.python.daemon.module", "engine.worker_daemon")
         .config("spark.ui.enabled", "false")
         # Console progress writes \r-partial lines that splice into

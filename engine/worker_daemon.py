@@ -5,7 +5,7 @@ and the spark-core jar ahead of site-packages. At the start of every task
 ``pyspark.worker_util.setup_spark_files`` calls
 ``importlib.invalidate_caches()``, and under CPython 3.11 that makes each
 cached ``zipimporter`` re-read its archive's directory: 16 importers and
-0.16-0.25 s per task on a 4-core host. When the installed pyspark is the
+about 0.2 s per task on a 4-core host. When the installed pyspark is the
 same version as the archived one, the daemon drops the archives before
 pyspark is imported, so that call only touches ``FileFinder``s.
 
@@ -22,7 +22,7 @@ import re
 import sys
 import zipfile
 
-SPARK_ARCHIVES = ("pyspark.zip", "py4j-*-src.zip", "*.jar")
+_SPARK_ARCHIVES = ("pyspark.zip", "py4j-*-src.zip", "*.jar")
 _VERSION = re.compile(r"""__version__\b[^=]*=\s*['"]([^'"]+)['"]""")
 
 
@@ -30,7 +30,7 @@ def without_spark_archives(path: list[str]) -> list[str]:
     """``path`` without Spark's archives, or ``path`` itself unless the
     rest of it finds ``pyspark`` and ``py4j`` and that pyspark carries the
     same ``__version__`` as the one in ``pyspark.zip``."""
-    spark = [p for p in path if any(fnmatch.fnmatch(os.path.basename(p), a) for a in SPARK_ARCHIVES)]
+    spark = [p for p in path if any(fnmatch.fnmatch(os.path.basename(p), a) for a in _SPARK_ARCHIVES)]
     rest = [p for p in path if p not in spark]
     found = [importlib.machinery.PathFinder.find_spec(m, rest) for m in ("pyspark", "py4j")]
     zips = [p for p in spark if os.path.basename(p) == "pyspark.zip"]
