@@ -100,16 +100,6 @@ def main() -> None:
     # began, end stamp read 10.61), so only the START stamp can
     # distinguish a genuinely contended box from the bench itself.
     load_start = os.getloadavg() if hasattr(os, "getloadavg") else None
-    # VERDICT r12 task 3: embed the host-health canary verdict in the
-    # artifact itself (r12 proved load_avg_start can read 0.07 while
-    # throughput is 4x down — steal — so the artifact must carry the
-    # throughput-based verdict, not just the load stamp). Runs as a
-    # subprocess BEFORE this process builds its session: a fresh JVM
-    # is the canary's calibrated context, and running the reference
-    # keys here would pre-warm two timed headline keys.
-    from tools.host_canary import subprocess_verdict
-
-    canary = subprocess_verdict()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     spark = get_spark("bench")
@@ -176,7 +166,6 @@ def main() -> None:
                     [round(x, 2) for x in load_start] if load_start else None
                 ),
                 "load_avg": [round(x, 2) for x in load] if load else None,
-                "host_canary": canary,
             }
         )
     )

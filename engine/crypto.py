@@ -17,12 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.io import load_table
+from engine.io import load_table as _t
 from engine.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -397,7 +393,7 @@ def q_rollup_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned once, not once per granularity. Calendar buckets are
     emitted as ISO date strings (cross-engine-stable per the float/date
     policy in engine/registry.py)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_rt")
+    _t(spark, sf_dir, "events").createOrReplaceTempView("events_rt")
     return spark.sql(
         """
         WITH e AS (SELECT event_type,
@@ -2098,7 +2094,7 @@ def q_risk_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily series in ONE hash aggregate; the lag and rank windows run
     on those ~2.4k rows (constant at any corpus size); the report is
     a single aggregate of that."""
-    o = load_table(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders")
     d = (
         o.select(
             F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("di"),
@@ -2207,7 +2203,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily series; the centered window and the 7-row day-of-week
     aggregate run on that (~2.4k rows, constant at any corpus size);
     the seasonal table broadcasts back."""
-    o = load_table(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders")
     d = (
         o.select(
             F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("di"),
@@ -2394,7 +2390,7 @@ def q_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate; three bounded-frame window passes (or one join
     against a 3-row horizon table) over ~2.4k rows; constant work at
     any corpus size."""
-    o = load_table(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders")
     d = (
         o.select(
             F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("di"),
@@ -2505,7 +2501,7 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     the day; the 1-row max-day bound stops churn attribution past the
     series end. Identity new+retained+resurrected = DAU holds by
     construction and is pinned in tests."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     ud = (
         ev.select(
             "user_id",
@@ -2646,7 +2642,7 @@ def q_win_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     window frame ≤32 rows; one exchange serves the within-block
     cumsum, the block totals, and the per-block reduce; everything
     downstream is ≤|blocks| rows. The base series is calendar-bounded."""
-    o = load_table(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders")
     d = (
         o.select(
             F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("di"),
@@ -3689,7 +3685,7 @@ def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded (the centered window runs on the daily table)."""
     from pyspark.sql import Window
 
-    o = load_table(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders")
     d = (
         o.select(
             F.floor(F.unix_timestamp("o_orderdate") / 86400)
@@ -5711,7 +5707,7 @@ def q_win_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines evaluate the IDENTICAL (2x + 12·acc)/14 expression
     seeded with the first close, so the doubles (and the sign flags
     read off them) agree bit-for-bit."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     c = F.floor(F.col("value") * 100).cast("long")
     d = (
         ev.select(
@@ -5844,7 +5840,7 @@ def q_win_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last, in the SAME pinned order — bit-identical doubles, so
     the candle color flag agrees too. Per-type day counts bound the
     arrays; one hash agg + one fold, no window."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     c = F.floor(F.col("value") * 100).cast("long")
     st = F.struct(
         F.col("ts").alias("t"), F.col("event_id").alias("e"), F.col("c").alias("v")
@@ -5994,7 +5990,7 @@ def q_win_kama(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold the identical expression over the identical list, so the
     doubles match bit-for-bit. Day counts per type bound the
     arrays."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     d = (
         ev.select(
             "event_type",
@@ -6116,7 +6112,7 @@ def q_win_volume_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the EXCLUSIVE prefix is under 70%) so no float decides
     membership; ordering ties break bucket-ascending. The windows run
     over the bounded (type × price-bucket) domain, never ticks."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     b = (
         ev.select(
             "event_type",
@@ -6218,7 +6214,7 @@ def q_win_choppiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag compares the exact ratio against the CONSTANT 14^0.618
     (evaluated identically on both engines) rather than the rounded
     display value."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     d = (
         ev.select(
             "event_type",
@@ -6336,7 +6332,7 @@ def q_win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (10⁴·(peak−close)/peak), their squares accumulate as 128-bit in
     the rolling window, and the RMS is one sqrt of an exact-integer
     mean. Two stacked 14-row windows share the per-type exchange."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     d = (
         ev.select(
             "event_type",

@@ -2,7 +2,7 @@
 
 ``knn_block`` is the label-block cosine kNN behind q_embed_knn and
 q_graph_pagerank; ``rank_block`` is the exact-integer PageRank round
-loop behind :func:`engine.pipeline.pagerank`. This module imports
+loop behind q_graph_pagerank. This module imports
 nothing from the engine, so a worker unpickling a grouped function that
 calls them imports only this file, not the query modules that define
 the frames (importing ``engine.llm_ops`` and ``engine.pipeline`` costs a

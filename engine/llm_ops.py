@@ -29,16 +29,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.io import load_table
+from engine.io import load_table as _t
 from engine.kernels import knn_block, knn_frame
 from engine.registry import register
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 FP_MOD = 1_000_000_007
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _tokens(col):
@@ -3900,7 +3896,7 @@ def q_text_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. All four outputs derive from exact integer counts, so the
     ratio is a deterministic double on both engines.
     """
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     wc = (
         docs.select(
             F.explode(

@@ -26,16 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.io import load_table
+from engine.io import load_table as _t
 from engine.kernels import PR_SCALE, rank_block
 from engine.registry import register
 
 SPLIT_BUCKETS = 100
 SEQ_BUDGET = 512  # tokens per packed training sequence
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _md5_bucket(col, salt: str, buckets: int = SPLIT_BUCKETS):
@@ -1360,41 +1356,6 @@ def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(nodes: DataFrame, edges: DataFrame, id_col: str, block_col: str,
-             rounds: int = 5, d: float = 0.85) -> DataFrame:
-    """PageRank by power iteration over a directed edge list (src, dst
-    in its first two columns) — the authority signal used to weight
-    training documents by graph centrality.
-
-    Scale shape: the block bounds the fixpoint as it bounds the kNN
-    pair fold (a label-blocked graph has no edge across labels).
-    ``nodes`` (``id_col``, ``block_col``) is left-joined to its
-    out-edges on src, so edgeless nodes keep a row, and one
-    ``groupBy(block).applyInPandas`` runs every round of
-    :func:`rank_block` over one block: one lazy plan, one shuffle, no
-    Spark job while the frame is built. A broken block precondition
-    raises ``ValueError`` in the worker (a ``PythonException`` at
-    execution)."""
-
-    def block_ranks(key, pdf):
-        src, has = pdf["node"].to_numpy(np.int64), pdf["out"].to_numpy(bool)
-        ids = np.unique(src)
-        qr = rank_block(ids, src[has], pdf["dst"].to_numpy(np.int64)[has], rounds, d)
-        return pd.DataFrame({"node": ids, "qr": qr})
-
-    a, b = edges.columns[:2]
-    e = edges.select(F.col(a).alias("node"), F.col(b).alias("dst"))
-    return (
-        nodes.select(F.col(id_col).alias("node"), block_col)
-        .join(e, "node", "left")
-        .select("node", block_col, F.col("dst").isNotNull().alias("out"),
-                F.coalesce("dst", "node").alias("dst"))
-        .groupBy(block_col)
-        .applyInPandas(block_ranks, "node long, qr long")
-        .select("node", (F.col("qr") / PR_SCALE).alias("rank"), "qr")
-    )
-
-
 def _pagerank_oracle() -> str:
     """Unrolled 5-round quantized PageRank as a single DuckDB
     statement: the kNN-edge CTEs (verbatim from KNN_ORACLE) feed five
@@ -1699,7 +1660,7 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANY tie structure, not just distinct scores.
     """
     scored = (
-        load_table(spark, sf_dir, "embeddings")
+        _t(spark, sf_dir, "embeddings")
         .select(
             F.element_at("embedding", 1).cast("double").alias("score"),
             F.when(F.col("label") % 2 == 1, 1).otherwise(0).alias("y"),
@@ -1794,7 +1755,7 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast.
     """
     daily = (
-        load_table(spark, sf_dir, "events")
+        _t(spark, sf_dir, "events")
         .select(
             "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
         )
@@ -1872,7 +1833,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user division (the round-on-quotient trap). Month arithmetic
     uses year*12+month integers — identical on both engines.
     """
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     firstm = ev.groupBy("user_id").agg(
         F.min(F.date_trunc("month", F.col("ts")).cast("date")).alias("cohort")
     )
@@ -1947,7 +1908,7 @@ def q_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     union counts; the Jaccard is their deterministic quotient.
     """
     seg = (
-        load_table(spark, sf_dir, "events")
+        _t(spark, sf_dir, "events")
         .select("event_type", "user_id")
         .distinct()
         .localCheckpoint(eager=True)
@@ -2025,7 +1986,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-20 lowering to TakeOrderedAndProject. Ties in ts break on
     event_id on both engines, so the path strings are byte-identical.
     """
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     sess = ev.withColumn(
@@ -2112,7 +2073,7 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual on already-matched keys. Three tiny count aggregates fold
     into one row.
     """
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     s = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
@@ -2198,7 +2159,7 @@ def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     span = ev.groupBy("user_id").agg(
         F.min(F.date_trunc("day", F.col("ts")).cast("date")).alias("first_day"),
         F.max(F.date_trunc("day", F.col("ts")).cast("date")).alias("last_day"),
@@ -2273,7 +2234,7 @@ def q_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy-bucket domain.
     """
     tc = (
-        load_table(spark, sf_dir, "events")
+        _t(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")
         .agg(F.count("*").alias("c"))
     )
@@ -2339,7 +2300,7 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     health gate in front of the deep screens (q_text_quality,
     q_dedup_*, q_text_hapax).
     """
-    docs = load_table(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     toks = F.size(
         F.regexp_extract_all(F.lower(F.col("text")), F.lit("([a-z]+)"), 1)
     )
@@ -2390,7 +2351,7 @@ def q_order_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = (
-        load_table(spark, sf_dir, "orders")
+        _t(spark, sf_dir, "orders")
         .select(
             F.datediff(
                 F.col("o_orderdate"), F.lag("o_orderdate").over(w)
@@ -3717,7 +3678,7 @@ def q_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions). The trailing underscore on precision_ dodges nothing
     in Spark but keeps the column name engine-neutral (PRECISION is
     reserved in some SQL dialects)."""
-    scored = load_table(spark, sf_dir, "embeddings").select(
+    scored = _t(spark, sf_dir, "embeddings").select(
         F.when(F.element_at("embedding", 1).cast("double") >= 0, 1)
         .otherwise(0)
         .alias("yhat"),
@@ -3823,7 +3784,7 @@ def q_eval_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     y6 = (
         F.when(F.col("label") % 2 == 1, F.lit(1000000)).otherwise(F.lit(0))
     ).cast("long")
-    scored = load_table(spark, sf_dir, "embeddings").select(
+    scored = _t(spark, sf_dir, "embeddings").select(
         p6.alias("p6"), y6.alias("y6")
     )
     dec = lambda c_: c_.cast("decimal(38,0)")  # noqa: E731
@@ -4060,7 +4021,7 @@ def q_eval_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form from the exact rank, and gain/lift are single IEEE
     divisions of exact counts (lift via cum_pos·n / cum_n·p — one
     division, never a ratio of two rounded ratios)."""
-    s = load_table(spark, sf_dir, "embeddings").select(
+    s = _t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.element_at("embedding", 1).cast("double").alias("score"),
         F.when(F.col("label") % 2 == 1, 1).otherwise(0).alias("y"),
@@ -4383,7 +4344,7 @@ def q_eval_f1_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     y = F.when(F.col("label") % 2 == 1, 1).otherwise(0)
     cell = (
-        load_table(spark, sf_dir, "embeddings")
+        _t(spark, sf_dir, "embeddings")
         .select((p6 / 50000).cast("long").alias("bucket"), y.alias("y"))
         .groupBy("bucket", "y")
         .agg(F.count("*").cast("long").alias("c"))
@@ -4665,7 +4626,7 @@ def q_eval_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     y = F.when(F.col("label") % 2 == 1, 1).otherwise(0)
     g = (
-        load_table(spark, sf_dir, "embeddings")
+        _t(spark, sf_dir, "embeddings")
         .select(p6.alias("p6"), y.alias("y"))
         .groupBy("p6")
         .agg(
@@ -4944,7 +4905,7 @@ def q_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     but the aggregate collapses immediately to one row per query),
     then a min over relevant positions. Tie-break (score DESC,
     vec_id) keeps ranks cross-engine-exact."""
-    e = load_table(spark, sf_dir, "embeddings")
+    e = _t(spark, sf_dir, "embeddings")
     s = e.select(
         F.col("label").alias("qid"),
         "vec_id",

@@ -32,6 +32,10 @@ Contract details (driver protocol, __spark_entry__.py docstring):
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+import re
 from collections.abc import Callable
 from typing import Any
 
@@ -62,341 +66,38 @@ def _ensure_loaded() -> None:
     engine.load_all()
 
 
-# Driver-facing key order. The external correctness harness records the
-# FIRST 50 keys of ``queries()`` (observed r01-r09: exactly 50 rows,
-# first-50 registration order, every round). State after r09: every
-# one of the 427 keys has at least one driver row (never-graded = 0,
-# the r8 verdict's headline ask) — 409 hash-green + 18 rows-only,
-# ZERO red across all nine rounds. The window's job from r10 onward is
-# EVIDENCE FRESHNESS: re-cert any key whose plan/output changed after
-# its last row, then refresh the stalest rows, block by block.
-#
-# Refresh cadence (VERDICT r9 task 7): 433 keys (430 + the three r14
-# additions) / ~40-45 refresh slots per round ≈ 9-10 rounds per full
-# refresh cycle, so every key re-grades at least once per ~10 rounds
-# while the full local differential sweep (tools/check.py, a seal
-# gate) re-verifies all 433 every round. Walk the backlog in prefix
-# order: r10 = re-certs +
-# r01 block head; r11 = the displaced r01 remainder (q_fn_string ...
-# q_agg_approx_distinct, 7 keys) + the r02 block head; later rounds
-# keep draining r02 → r09.
-#
-# Re-cert slot rule (VERDICT r10 task 5): a plan/perf change to a
-# driver-graded key costs one re-cert window slot — but rows-only keys
-# NEVER take a re-cert slot unless their output ROW COUNT changed.
-# A rows-only key's driver row carries nothing beyond a row count
-# (r10 spent a slot on q_agg_tdigest and bought no evidence its
-# in-repo hypothesis pin didn't already hold); their real assurance
-# is the named contract test, so plan changes there re-verify via the
-# test suite + full local sweep instead.
-#
-# Round 14 window = 3 first-rows (the round's new operators,
-# q_text_repetition_rules + q_doc_domain_mixture + q_dedup_url_fuzzy —
-# never-graded keys lead every window) + 2 re-certs (q_embed_kmeans +
-# q_dedup_semdedup: the ADVICE-r13 empty-cluster guard rewrote both
-# Lloyd oracles' centroid-update SQL, an executed-path change, so
-# their prior rows no longer certify the oracle text) + the
-# pre-encoded refresh rotation (the r05-remainder prefix, 45 keys —
-# exactly the r13 backlog prefix, per VERDICT r13 task 1;
-# q_order_cadence slides to the r15 front).
-#
-# Round 13 window = 3 first-rows (the round's new operators,
-# q_text_gopher_rules + q_dedup_semdedup + q_doc_dsir — never-graded
-# keys lead every window) + 0 re-certs + the pre-encoded refresh rotation
-# (the full r04 remainder, 44 keys, then the r05 head — exactly the
-# r12 backlog prefix, per VERDICT r12 task 1). No engine plan change
-# has touched a graded key since the r12 rows, so no re-cert slot is
-# spent; if an r13 change lands on a graded key, it fronts the window
-# and displaces the r05-head fill (the re-cert rule, VERDICT r10
-# task 5).
-#
-# Round 12 window = 3 re-certs + the pre-encoded refresh rotation
-# (the full r03 remainder, then the r04 head — exactly the r11
-# backlog prefix):
-#   - q_dedup_cluster / q_dedup_soft_weights / q_graph_components —
-#     _cc_driver_union_find gained a NULL-endpoint guard (r12
-#     ADVICE): NULL endpoints are now skipped exactly as the
-#     distributed loop's equi-joins drop them, instead of raising
-#     TypeError on `ru < rv`; the endpoints-⊆-nodes precondition is
-#     documented on connected_components. No caller can produce a
-#     NULL endpoint today, so outputs and Spark plans are unchanged —
-#     but the executed driver code path changed after their r11 rows,
-#     so per the re-cert rule (same reading as q_stats_anova's r10
-#     unchanged-output re-cert) all three re-cert. All three are
-#     oracle keys (rows-only exclusion does not apply).
-#
-# Round 11 window = 3 re-certs + the pre-encoded refresh rotation
-# (the displaced r01 remainder, then the whole r02 block, then the
-# r03 head — exactly the r10 backlog prefix):
-#   - q_dedup_cluster / q_dedup_soft_weights / q_graph_components —
-#     connected_components gained a measured-count cutover (r11):
-#     pair lists ≤ _CC_DRIVER_EDGE_CAP are solved driver-side by
-#     union-by-min union-find (label = component min, bit-identical
-#     to the loop's fixpoint) instead of paying the distributed
-#     loop's ~1 s/round fixed overhead; past the cap the unchanged
-#     loop runs. Warm sf0.1: 6.3/6.3/4.0 s → ~2.2/2.3/2.1 s. Output
-#     values unchanged (sf0.01 differential + both-paths property
-#     test), but the plan changed after their latest rows (r07 /
-#     r07 / r06), so all three re-cert.
-#
-# Round 10 window was 10 re-certs + the first 40 keys of the r01
-# block (now the freshest cohort — tail of the backlog):
-#   - q_dedup_ngram — shares q_dedup_jaccard's _jaccard_group_pairs
-#     MinHash-candidate cutover path verbatim (jaccard's r09 row
-#     certifies the mechanism; ngram gets its own row here);
-#   - q_sim_pairwise — newest row is r06, before the (env-gated,
-#     default-off) r7 SPARK_GRAFT_ANN_MODE cutover;
-#   - q_embed_matryoshka — r07 row already postdates its rewrite
-#     (belt-and-braces, spilled from the r9 plan);
-#   - q_agg_tdigest — the r9 lerp-stable two-product quantile
-#     interpolation postdates its r06 row (rows-only key; the re-cert
-#     precedent applies to any post-row plan/output change);
-#   - q_stream_stream_join — its replay path changed POST-SEAL in r9
-#     (c8a483b: files_per_trigger=2, 4 micro-batches) while its only
-#     driver row is r02; VERDICT r9 "missing" #2 asked it to jump the
-#     queue ahead of its natural r02-block slot;
-#   - q_stats_anova — the first r10 full-registry sf0.1 snapshot
-#     caught its k-row SSB/SSW long sums overflowing int64 at sf0.1
-#     (a single group's qssw ≈ 6.3e18 cents²); both sides now sum in
-#     decimal(38,0)/HUGEINT. Output values are unchanged at the
-#     graded SFs, but the plan changed after its r06 row — re-cert
-#     precedent applies (displaces q_fn_map to the r01 remainder);
-#   - q_stats_permutation + q_stats_fdr_bh — the snapshot's slowest
-#     non-fixpoint walls (7.5 s / 8.1 s warm at sf0.1): the 99-way
-#     replicate fan-out now crosses the per-(event_type, user_id)
-#     integer aggregate instead of raw events (both the observed arm
-#     and every permuted assignment are functions of user_id alone,
-#     so the reduction is algebraically lossless — 1.3/1.4 s after).
-#     Hash-identical at sf0.01 and sf0.1, but the plan changed, so
-#     both re-cert (displacing q_fn_math/q_fn_array to the r01
-#     remainder);
-#   - q_graph_transitivity — its edge list (a lineitem self-join) was
-#     recomputed by each of ~4 downstream subplans; it now
-#     materializes once via eager localCheckpoint (5.5 s → 2.2 s warm
-#     at sf0.1). Plan changed after its r09 row (displaces q_fn_date);
-#   - q_stream_stateful — replay coarsened to 2 micro-batches
-#     (files_per_trigger=4) under the _read_stream invariance
-#     contract: the output keeps only the final per-user state, which
-#     is batch-boundary-invariant (5.9 s → 1.9 s warm at sf0.1). Plan
-#     changed after its r02 row (displaces q_fn_string).
-_PRIORITY: list[str] = [
-    # ================= r16 window (slots 0-49) =================
-    # slots 0-2: the three r16 additions (never-graded keys lead every
-    # window — tests/test_registry.test_no_driver_window_slot_is_wasted):
-    # Gopher Table A1 line-family rules + C4 cleaning heuristics + the
-    # CCNet perplexity-bucket partitioner, the round's full 0-3 cap
-    # (VERDICT r15 task 3)
-    "q_text_gopher_lines", "q_text_c4_rules", "q_text_ccnet_buckets",
-    # slot 3: re-cert (tests/test_registry._RECERT) — the ADVICE-r15
-    # pair-stage extraction (_url_fuzzy_pairs, enabling the crafted
-    # two-domain block-key test) is a verbatim-expression refactor
-    # with an identical plan, but the executed code path changed
-    # after the key's r15 row — the r12 CC-trio precedent applies
-    "q_dedup_url_fuzzy",
-    # slots 4-49: the full 46-key r07 block — VERDICT r15 task 1:
-    # after this window no key's latest row is older than r08
-    # (q_abc_xyz, the r08 head, slides back to the backlog fill).
+# Driver-facing key order. The external correctness harness grades the
+# FIRST 50 keys of ``queries()`` each round and leaves its rows in
+# ``CORRECTNESS_r{N}.json`` beside the package. Keys are ordered by
+# staleness so every window goes where evidence is oldest: keys no
+# artifact has graded first, then by the last round that graded them,
+# oldest first; ties keep registration order. With no artifacts (the
+# package imported from elsewhere) this is registration order.
+_ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
-    # r07 rows (CORRECTNESS_r07.json order; q_embed_matryoshka fronted
-    # to the r10 re-cert slots; q_dedup_containment re-graded r09 —
-    # moved to the r09 block)
-    # (q_dedup_cluster and q_dedup_soft_weights fronted to the r11
-    # re-cert slots — the connected_components size cutover postdates
-    # their r07 rows)
-    "q_dedup_minhash",
-    "q_join_spatial", "q_quality_freshness", "q_embed_outliers",
-    "q_drawdown_duration", "q_variance_ratio", "q_growth_accounting",
-    "q_win_hurst", "q_source_schema_evolution", "q_tpch_q1", "q_fn_lambda",
-    "q_sql_recursive", "q_win_ichimoku", "q_stats_spearman",
-    "q_stats_kendall", "q_liquidity_metrics", "q_stats_regression_multi",
-    "q_gdpr_erasure", "q_orderflow_imbalance", "q_sample_class_balance",
-    "q_win_pivot_points", "q_stats_srm",
-    "q_user_lorenz", "q_stats_cuped",
-    "q_stats_proportions", "q_roll_spread", "q_vol_estimators",
-    "q_stats_jackknife", "q_stats_granger", "q_multimodal_phash",
-    "q_text_bigram_entropy", "q_stats_power", "q_win_vpin",
-    "q_attribution_markov", "q_dedup_threshold_sweep", "q_win_rolling_beta",
-    "q_sequence_ngrams", "q_tokenize_fertility", "q_privacy_kanonymity",
-    "q_feature_hashing", "q_anomaly_esd", "q_supplier_scorecard",
-    "q_win_renko", "q_fn_variant", "q_stats_acf", "q_stats_runs_test",
-    # r08 rows (CORRECTNESS_r08.json order)
 
-    "q_abc_xyz", "q_price_elasticity", "q_basket_sequential",
-    "q_events_burstiness", "q_forecast_mase", "q_text_compression",
-    "q_seasonality_strength", "q_eval_calibration", "q_stats_qte",
-    "q_stats_winsorized", "q_sample_kfold", "q_win_mfi", "q_doc_novelty",
-    "q_embed_silhouette", "q_win_pairs_spread", "q_agg_geomean",
-    "q_text_script_mix", "q_win_donchian", "q_win_keltner", "q_stats_levene",
-    "q_dedup_span", "q_win_adx", "q_win_cci", "q_win_aroon",
-    "q_win_williams_r", "q_stats_cramers_v", "q_win_vortex", "q_win_cmo",
-    "q_win_dpo", "q_win_ultimate", "q_win_force_index", "q_stats_cohens_d",
-    "q_stats_theil_u", "q_eval_confusion", "q_eval_brier",
-    "q_embed_dim_stats", "q_vocab_coverage", "q_stats_bootstrap",
-    # (q_stats_permutation fronted to the r10 re-cert slots — the
-    # user-level fan-out cutover postdates its row)
-    "q_stats_mcnemar", "q_price_index",
-    "q_graph_kcore", "q_tokenize_vocab_prune", "q_stream_median",
-    "q_sim_mmr", "q_market_concentration", "q_embed_ivf_recall",
-    "q_eval_gains", "q_embed_pq", "q_agg_ddsketch",
-    # r09 rows (CORRECTNESS_r09.json order — the freshest cohort:
-    # the 3 r9 re-certs + all 47 formerly never-graded keys)
+@functools.cache
+def _last_graded() -> dict[str, int]:
+    """The last round whose CORRECTNESS artifact holds a row for each key."""
+    import engine
 
-    "q_stream_watermark_late", "q_dedup_jaccard", "q_dedup_containment",
-    "q_stream_pipeline",
-    "q_sample_weighted", "q_backtest_sma", "q_audit_duplicates",
-    "q_embed_drift", "q_stats_shrinkage", "q_regime_transitions",
-    "q_revenue_waterfall", "q_dedup_span_coverage", "q_text_fightin_words",
-    # (q_stats_fdr_bh fronted to the r10 re-cert slots — it composes
-    # q_stats_permutation, whose plan changed after its r09 row)
-    "q_quality_referential", "q_win_efficiency_ratio",
-    "q_graph_assortativity", "q_stats_tost",
-    "q_multimodal_pixels", "q_stats_kruskal_wallis", "q_stats_friedman",
-    "q_eval_f1_sweep", "q_win_elder_ray", "q_win_heikin_ashi",
-    "q_stats_bartlett", "q_orders_backlog", "q_privacy_ldiversity",
-    "q_text_code_detection", "q_observe_metrics", "q_win_kama",
-    "q_eval_ks", "q_funnel_latency", "q_segment_migration",
-    "q_win_volume_profile", "q_stats_dunn", "q_eval_mrr",
-    "q_win_choppiness", "q_source_text_roundtrip",
-    # (q_embed_kmeans fronted to the r14 re-cert slots — the
-    # empty-cluster oracle guard postdates its r11 row)
-    "q_graph_distances", "q_stats_wilcoxon", "q_stats_hill",
-    "q_win_ulcer_index", "q_text_term_burstiness", "q_sink_compaction",
-    # (q_graph_transitivity fronted to the r10 re-cert slots — the
-    # edge-list localCheckpoint cutover postdates its r09 row)
-    "q_stats_jarque_bera", "q_sample_neyman",
-    "q_multimodal_jpeg", "q_multimodal_wav_features",
-    # r10 rows (CORRECTNESS_r10.json order — the freshest cohort: the
-    # 10 r10 re-certs + the first 40 keys of the r01 refresh block)
-
-    "q_dedup_ngram", "q_sim_pairwise", "q_embed_matryoshka",
-    "q_agg_tdigest", "q_stream_stream_join", "q_stats_anova",
-    "q_stats_permutation", "q_stats_fdr_bh", "q_graph_transitivity",
-    "q_stream_stateful",
-    "q_agg_group", "q_join_broadcast", "q_join_sortmerge", "q_join_multiway",
-    "q_win_running", "q_topk_per_group", "q_agg_pivot", "q_project",
-    "q_filter", "q_filter_date", "q_case_when", "q_join_left",
-    "q_join_outer", "q_join_semi", "q_join_anti", "q_join_theta",
-    "q_join_range_interval", "q_join_cross", "q_agg_global",
-    "q_agg_distinct", "q_agg_percentile", "q_agg_stats", "q_agg_rollup",
-    "q_agg_cube", "q_agg_grouping_sets", "q_agg_having", "q_win_rank",
-    "q_win_lag_lead", "q_win_moving_avg", "q_win_range_frame",
-    "q_win_first_last", "q_win_pct", "q_sort_multi", "q_topk",
-    "q_limit_offset", "q_union_all", "q_union_distinct", "q_intersect",
-    "q_except", "q_distinct",
-    # r11 rows (CORRECTNESS_r11.json order — the freshest cohort: the
-    # displaced r01 remainder + the full r02 block + the r03 head;
-    # the CC trio from the r11 re-cert slots is fronted to the r12
-    # re-cert slots above)
-
-    "q_fn_string", "q_fn_date", "q_fn_math", "q_fn_array", "q_fn_map",
-    "q_fn_explode", "q_agg_approx_distinct",
-    "q_sim_topk", "q_agg_collect", "q_dedup_exact", "q_dedup_embedding",
-    "q_sim_topk_lsh", "q_sim_join", "q_text_stats", "q_text_tfidf",
-    "q_text_quality", "q_text_langid", "q_text_fingerprint", "q_tokenize",
-    "q_multimodal_struct", "q_multimodal_binary", "q_multimodal_features",
-    "q_bars_ohlcv", "q_vwap", "q_win_volatility", "q_split_hash",
-    "q_sample_stratified", "q_sessionize", "q_pack_sequences",
-    "q_merge_upsert", "q_fn_json", "q_fn_cond_null",
-    "q_fn_hash", "q_fn_hash_native", "q_fn_cast", "q_udf_scalar",
-    "q_udf_pandas_scalar", "q_udf_pandas_agg", "q_udf_grouped_map",
-    "q_udf_map_batches", "q_udtf", "q_stream_tumbling", "q_stream_sliding",
-    "q_stream_session", "q_stream_dedup", "q_stream_join",
-    "q_join_skew_salted",
-    # r12 rows (CORRECTNESS_r12.json order — the freshest cohort: the
-    # 3 CC-trio re-certs + the full r03 remainder + the r04 head)
-
-    "q_dedup_cluster", "q_dedup_soft_weights", "q_graph_components",
-    "q_profile_table",
-    "q_funnel", "q_sim_topk_ivf", "q_join_asof", "q_win_ntile",
-    "q_dedup_embedding_ann", "q_unpivot", "q_agg_hll_sketch", "q_sample_quota",
-    "q_split_contamination", "q_retention", "q_anomaly_zscore", "q_win_corr",
-    "q_text_pii", "q_text_repetition", "q_join_asof_tolerance", "q_agg_mode",
-    "q_text_ngram_top", "q_fn_bitwise", "q_pipeline_pretrain", "q_drawdown",
-    "q_twap", "q_bar_gaps", "q_resample_ffill", "q_agg_kll_quantiles",
-    "q_agg_theta_sketch", "q_text_entropy", "q_rollup_time", "q_sample_mixture",
-    "q_doc_chunk", "q_stream_bars", "q_join_null_safe", "q_join_lateral",
-    "q_except_all", "q_intersect_all", "q_udf_map_arrow", "q_agg_histogram",
-    "q_win_gaps_islands", "q_scd2", "q_join_point_in_time", "q_agg_filter",
-    "q_win_nth_value", "q_fn_url", "q_fn_explode_outer", "q_tpch_q5",
-    "q_tpch_q18", "q_tpch_q3",
-    # r13 rows (CORRECTNESS_r13.json order — the freshest cohort: the
-    # 3 r13 additions + the r04 remainder + the r05 head;
-    # q_dedup_semdedup fronted to the r14 re-cert slots)
-
-    "q_text_gopher_rules", "q_doc_dsir", "q_tpch_q10", "q_tpch_q6",
-    "q_tpch_q7", "q_tpch_q14", "q_tpch_q19", "q_tpch_q4", "q_tpch_q15",
-    "q_tpch_q17", "q_tpch_q22", "q_win_bollinger", "q_win_rsi", "q_win_ewma",
-    "q_win_macd", "q_anomaly_mad", "q_win_obv", "q_win_stochastic",
-    "q_dedup_edit", "q_dedup_url", "q_text_bm25", "q_sim_hybrid_rrf",
-    "q_embed_centroids", "q_agg_heavy_hitters", "q_tokenize_bpe",
-    "q_sample_temperature", "q_sample_reservoir", "q_snapshot_diff",
-    "q_multimodal_decode", "q_text_boilerplate", "q_embed_knn",
-    "q_shuffle_shard", "q_fn_regexp", "q_event_paths", "q_basket_pairs",
-    "q_win_rolling_median", "q_concurrency", "q_join_range_banded",
-    "q_corr_matrix", "q_agg_grouping_id", "q_rollup_incremental",
-    "q_sample_negative", "q_win_cusum", "q_time_to_event", "q_tpch_q2",
-    "q_tpch_q8", "q_embed_quantize", "q_tpch_q9", "q_tpch_q11",
-    # r14 rows (CORRECTNESS_r14.json order — the freshest cohort: the
-    # r14 additions + the 2 Lloyd re-certs + the r05 remainder;
-    # q_dedup_url_fuzzy / q_text_repetition_rules fronted to the r15
-    # re-cert slots)
-
-    "q_doc_domain_mixture", "q_embed_kmeans", "q_dedup_semdedup",
-    "q_tpch_q12", "q_tpch_q13", "q_tpch_q16", "q_tpch_q20", "q_tpch_q21",
-    "q_win_atr", "q_candle_patterns", "q_graph_triangles", "q_text_hapax",
-    "q_join_bloom", "q_stats_ttest", "q_stats_trend", "q_stream_anomaly",
-    "q_rfm_segments", "q_abc_pareto", "q_quality_rules", "q_eval_auc",
-    "q_time_intelligence", "q_source_python", "q_stream_python_source",
-    "q_seasonality", "q_resample_interpolate", "q_rolling_active_users",
-    "q_cohort_ltv", "q_user_overlap", "q_benford", "q_session_paths",
-    "q_stream_cdc_apply", "q_join_asof_forward", "q_text_perplexity",
-    "q_market_beta", "q_dedup_incremental", "q_skyline", "q_funnel_windowed",
-    "q_stats_did", "q_anomaly_seasonal", "q_survival_km", "q_text_keywords",
-    "q_agg_gini", "q_win_autocorr", "q_user_entropy",
-    "q_agg_weighted_median", "q_events_heatmap", "q_dataset_card",
-    "q_topk_movers",
-    # r15 rows (CORRECTNESS_r15.json order — the freshest cohort: the
-    # 3 r15 additions + the 2 ADVICE-fix re-certs + q_order_cadence +
-    # the full 44-key r06 block; q_dedup_url_fuzzy fronted to the r16
-    # re-cert slot — the pair-stage extraction postdates its r15 row)
-
-    "q_dedup_banding_sweep", "q_text_pii_redact", "q_dedup_cascade",
-    "q_text_repetition_rules", "q_order_cadence", "q_sql_api", "q_fn_try",
-    "q_embed_pca", "q_graph_pagerank", "q_dedup_simhash", "q_agg_count_min",
-    "q_eval_ndcg", "q_eval_pr_at_k", "q_graph_degree", "q_sample_importance",
-    "q_join_interval_overlap", "q_agg_bitmap_distinct", "q_win_holt",
-    "q_stats_chisq",
-    "q_sim_range", "q_agg_skew_kurt", "q_join_asof_nearest",
-    "q_text_readability",
-    "q_fn_datetime_extra", "q_doc_quality_model", "q_stream_topk",
-    "q_agg_argmax",
-    "q_agg_string_agg", "q_win_rolling_ols", "q_fn_struct", "q_pivot_dynamic",
-    "q_text_collocations", "q_text_zipf", "q_source_csv_roundtrip",
-    "q_source_json_roundtrip",
-    "q_sink_partition_prune", "q_stats_changepoint", "q_udtf_arrow",
-    "q_basket_rules",
-    "q_events_attribution", "q_stats_ks", "q_stats_mannwhitney",
-    "q_quality_drift",
-    "q_win_theil_sen", "q_risk_metrics", "q_seasonal_decompose",
-    "q_graph_link_predict",
-    "q_text_heaps", "q_multimodal_frames",
-]
+    last: dict[str, int] = {}
+    for name in os.listdir(engine.ROOT):
+        m = _ARTIFACT.fullmatch(name)
+        if m:
+            with open(os.path.join(engine.ROOT, name)) as fh:
+                for key in json.load(fh):
+                    last[key] = max(last.get(key, 0), int(m[1]))
+    return last
 
 
 def _ordered(d: dict[str, Any]) -> dict[str, Any]:
-    head = {k: d[k] for k in _PRIORITY if k in d}
-    tail = {k: v for k, v in d.items() if k not in head}
-    return {**head, **tail}
+    last = _last_graded()
+    return {k: d[k] for k in sorted(d, key=lambda k: last.get(k, -1))}
 
 
 def all_queries() -> dict[str, QueryFn]:
     _ensure_loaded()
-    # A typo or renamed operator in _PRIORITY must fail loudly — a
-    # silent skip would shift the graded 50-key window (ADVICE r2).
-    # (Checked here, not in _ordered: _ORACLES is legitimately a
-    # subset — rows-only keys register no oracle.)
-    missing = set(_PRIORITY) - set(_QUERIES)
-    assert not missing, f"_PRIORITY keys not in registry: {sorted(missing)}"
     return _ordered(_QUERIES)
 
 

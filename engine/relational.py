@@ -23,12 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.io import load_table
+from engine.io import load_table as _t
 from engine.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -709,7 +705,7 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets via the SQL entry point (SURVEY §3 EP3)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty
@@ -1229,8 +1225,8 @@ def q_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join key, never a per-customer re-scan of orders (the thing a
     naive lateral executor would do and the reason this is usually the
     first query to die at scale)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_lv")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_lv")
+    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_lv")
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_lv")
     return spark.sql(
         """
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
@@ -3175,7 +3171,7 @@ def q_quality_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames, no joins."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events")
     d = (
         ev.select(
             "event_type",

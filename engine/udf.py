@@ -16,12 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType
 
-from engine.io import load_table
+from engine.io import load_table as _t
 from engine.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -38,7 +34,7 @@ def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered slice — this is the documented slow path)."""
 
     @F.udf(returnType=DoubleType())
-    def net_price(price: float, discount: float) -> float:
+    def net_price(price, discount):
         return price * (1 - discount)
 
     li = _t(spark, sf_dir, "lineitem")

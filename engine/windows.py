@@ -11,12 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.io import load_table
+from engine.io import load_table as _t
 from engine.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -349,7 +345,7 @@ def q_win_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     longer horizons the standard refinements are the repeated-median
     estimator or per-band medians (the q_rfm_segments banded-rank
     scheme on the slope key)."""
-    o = load_table(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders")
     d = (
         o.select(
             F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("di"),

@@ -15,10 +15,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from engine import ROOT
 from engine.io import load_table, read_csv, read_json, write_partitioned
 from tests.conftest import SF_SMOKE
 
-TMP = "/root/repo/.tmp/io_test"
+TMP = os.path.join(ROOT, ".tmp", "io_test")
 
 
 def setup_module():

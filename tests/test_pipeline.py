@@ -5,7 +5,6 @@ correctness vs a pure-Python union-find."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from engine.registry import all_queries
@@ -140,95 +139,3 @@ def test_scd2_intervals_partition_time(spark):
         assert vs[-1]["is_current"] and vs[-1]["eff_to"] is None
         for a, b in zip(vs, vs[1:]):
             assert a["eff_to"] == b["eff_from"], (user, a, b)
-
-
-def test_pagerank_matches_power_iteration(spark):
-    """The distributed PageRank must equal a single-process power
-    iteration over the same edge list (same rounds, same damping) to
-    float tolerance — the exactness guarantee for the iterative path."""
-    from collections import defaultdict
-
-    from engine.llm_ops import q_embed_knn
-    from engine.pipeline import pagerank
-
-    edges = [
-        (r["vec_id"], r["neighbor_id"])
-        for r in q_embed_knn(spark, SF_SMOKE).select("vec_id", "neighbor_id").collect()
-    ]
-    nodes = sorted({v for e in edges for v in e})
-    outdeg = defaultdict(int)
-    for s, _ in edges:
-        outdeg[s] += 1
-    rank = {n: 1.0 for n in nodes}
-    for _ in range(5):
-        in_sum = defaultdict(float)
-        for s, t in edges:
-            in_sum[t] += rank[s] / outdeg[s]
-        rank = {n: 0.15 + 0.85 * in_sum[n] for n in nodes}
-
-    e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    edf = spark.createDataFrame(edges, "vec_id long, neighbor_id long")
-    got = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            e.select("vec_id", "label"), edf, "vec_id", "label", rounds=5
-        ).collect()
-    }
-    assert set(got) == set(r["vec_id"] for r in e.select("vec_id").collect())
-    for n in nodes:
-        assert abs(got[n] - rank[n]) < 1e-6, (n, got[n], rank[n])
-    # nodes with no in-links sit at the damping floor
-    sinks = set(got) - set(nodes) | {n for n in nodes if n not in {t for _, t in edges}}
-    for n in sinks:
-        assert abs(got[n] - 0.15) < 1e-9
-
-
-# Two blocks: in "a", node 3 has out-edges but no in-edges and node 4
-# has no edges at all; "b" is a 2-cycle.
-_BLOCK_NODES = [(1, "a"), (2, "a"), (3, "a"), (4, "a"), (10, "b"), (11, "b")]
-_BLOCK_EDGES = [(1, 2), (2, 1), (3, 1), (3, 2), (10, 11), (11, 10)]
-
-
-def test_pagerank_blocks_match_integer_replay(spark):
-    """Each block's ranks equal a pure-Python replay of the exact
-    integer recurrence; edgeless and in-edge-free nodes sit at the
-    teleport floor, and every node keeps a row."""
-    from engine.pipeline import pagerank
-
-    nodes = spark.createDataFrame(_BLOCK_NODES, "id long, blk string")
-    edges = spark.createDataFrame(_BLOCK_EDGES, "src long, dst long")
-    got = {
-        r["node"]: r["qr"]
-        for r in pagerank(nodes, edges, "id", "blk", rounds=5).collect()
-    }
-    scale, teleport = 10**12, 15 * 10**10
-    outdeg: dict[int, int] = {}
-    for s, _ in _BLOCK_EDGES:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    qr = {n: scale for n, _ in _BLOCK_NODES}
-    for _ in range(5):
-        in_sum = dict.fromkeys(qr, 0)
-        for s, t in _BLOCK_EDGES:
-            in_sum[t] += qr[s] // outdeg[s]
-        qr = {n: teleport + (85 * in_sum[n]) // 100 for n in qr}
-    assert got == qr
-    assert got[3] == got[4] == teleport
-    assert got[10] == got[11] == scale
-
-
-def test_pagerank_rejects_broken_preconditions(spark):
-    """An edge leaving its block, or a block too large for int64
-    pico-unit ranks, must fail loudly when the frame runs, never rank
-    silently."""
-    from pyspark.errors import PythonException
-
-    from engine.pipeline import pagerank
-
-    nodes = spark.createDataFrame(_BLOCK_NODES, "id long, blk string")
-    edges = spark.createDataFrame(_BLOCK_EDGES + [(1, 10)], "src long, dst long")
-    with pytest.raises(PythonException, match="ValueError: pagerank: edge dst 10"):
-        pagerank(nodes, edges, "id", "blk").collect()
-    big = spark.range(110_000).select("id", F.lit("a").alias("blk"))
-    none = spark.createDataFrame([], "src long, dst long")
-    with pytest.raises(PythonException, match="past the int64 rank bound"):
-        pagerank(big, none, "id", "blk").collect()

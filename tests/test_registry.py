@@ -7,19 +7,9 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from engine.registry import _PRIORITY, all_oracles, all_queries
+from engine.registry import all_oracles, all_queries
 
 REPO = Path(__file__).resolve().parent.parent
-
-
-def test_priority_keys_all_registered():
-    assert set(_PRIORITY) <= set(all_queries())
-
-
-def test_priority_has_no_duplicates():
-    """A duplicate in _PRIORITY would silently shrink the graded 50-key
-    window (dict-comprehension dedup in _ordered)."""
-    assert len(_PRIORITY) == len(set(_PRIORITY))
 
 
 # Keys whose PLAN (or output) was rewritten after their last driver
@@ -101,22 +91,51 @@ def test_no_driver_window_slot_is_wasted():
     assert not wasted, f"refresh-only keys inside the window ahead of backlog: {wasted}"
 
 
-def test_host_canary_refs_not_stale():
-    """VERDICT r12 task 4: tools/host_canary.py's reference walls are
-    valid only for the plans that produced them (BENCH_FULL_r11-era
-    q_text_tfidf / q_tpch_q5). This pins a source hash of both
-    registered functions: an engine change to either key must refresh
-    the canary refs (re-measure on a healthy box with the canary's own
-    protocol) in the same commit, instead of silently reclassifying
-    host health against walls measured for a different plan."""
-    from tools.host_canary import stale_refs
+def _derived_order(monkeypatch, root: Path, keys: list[str]) -> list[str]:
+    """Key order ``_ordered`` derives from the artifacts under ``root``."""
+    import engine
+    from engine import registry
 
-    stale = stale_refs(all_queries())
-    assert not stale, (
-        f"canary reference keys changed since refs were pinned: {stale} — "
-        "re-measure tools/host_canary._REFS on a HEALTHY host with the "
-        "canary protocol and update _REF_SRC_SHA in the same commit"
-    )
+    monkeypatch.setattr(engine, "ROOT", str(root))
+    registry._last_graded.cache_clear()
+    try:
+        return list(registry._ordered(dict.fromkeys(keys)))
+    finally:
+        registry._last_graded.cache_clear()
+
+
+def test_order_is_staleness_from_correctness_artifacts(tmp_path, monkeypatch):
+    """Never-graded keys lead, then keys by their last grading round,
+    oldest first (rounds compare as numbers: r9 before r10); ties keep
+    registration order, and files that are not round artifacts are
+    ignored."""
+    rounds = {"r1": ["a", "b", "c"], "r2": ["b", "d"], "r9": ["f"], "r10": ["a"]}
+    for rnd, graded in rounds.items():
+        rows = dict.fromkeys(graded, {"hash_match": True})
+        (tmp_path / f"CORRECTNESS_{rnd}.json").write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_r3.json.bak").write_text(json.dumps({"new1": {}}))
+    keys = ["a", "b", "new1", "c", "d", "e", "f", "new2"]
+    assert _derived_order(monkeypatch, tmp_path, keys) == [
+        "new1", "e", "new2", "c", "b", "d", "f", "a",
+    ]
+
+
+def test_order_without_artifacts_is_registration_order(tmp_path, monkeypatch):
+    keys = ["z", "a", "m"]
+    assert _derived_order(monkeypatch, tmp_path, keys) == keys
+
+
+def test_driver_window_holds_the_stalest_keys():
+    """No key inside the 50-key window was graded more recently than a
+    key outside it, recomputed here from the artifacts themselves."""
+    last: dict[str, int] = {}
+    for f in REPO.glob("CORRECTNESS_r*.json"):
+        rnd = int(f.stem.split("_r")[1])
+        for k in json.loads(f.read_text()):
+            last[k] = max(last.get(k, 0), rnd)
+    assert last, "no CORRECTNESS artifacts beside the package"
+    age = [last.get(k, -1) for k in all_queries()]
+    assert max(age[:50]) <= min(age[50:])
 
 
 def test_oracle_keys_subset_and_aliased():
@@ -256,3 +275,18 @@ def test_python_workers_import_engine_from_any_cwd(tmp_path):
     lines = out.stdout.split("\n")
     assert "q_graph_pagerank 20" in lines
     assert any(x.startswith("q_source_python ") for x in lines)
+
+
+def test_udf_scalar_builds_without_warnings(spark):
+    """q_udf_scalar's row UDF declares its return type, so building the
+    key must not trip pyspark's type-hint eval-type inference."""
+    import warnings
+
+    from tests.conftest import SF_SMOKE
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        all_queries()["q_udf_scalar"](spark, SF_SMOKE)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)], [
+        str(w.message) for w in caught
+    ]

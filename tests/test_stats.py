@@ -10,6 +10,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+from engine import ROOT
 from engine.registry import all_oracles, all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -1718,9 +1719,6 @@ def test_mase_matches_pandas():
 def test_compression_ratio_matches_zlib_exactly():
     import zlib
 
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from engine.registry import all_queries
     from engine.session import get_spark
 
@@ -4275,8 +4273,8 @@ def test_sink_compaction_reduces_files_and_preserves_values(spark):
         assert got[int(r["nk"])]["n_customers"] == int(r["n"])
         assert got[int(r["nk"])]["balance_cents"] == int(r["b"])
     tag = SF.rstrip("/").rsplit("/", 1)[-1]
-    frag = glob.glob(f"/root/repo/.tmp/io/compact_src-{tag}/*.parquet")
-    comp = glob.glob(f"/root/repo/.tmp/io/compact_dst-{tag}/*.parquet")
+    frag = glob.glob(f"{ROOT}/.tmp/io/compact_src-{tag}/*.parquet")
+    comp = glob.glob(f"{ROOT}/.tmp/io/compact_dst-{tag}/*.parquet")
     assert len(frag) == 32 and 1 <= len(comp) < len(frag)
 
 

@@ -78,29 +78,10 @@ def print_diff(old_path: str, new_path: str) -> bool:
         s, e = d.get("load_avg_start"), d.get("load_avg")
         return f"load start={s} end={e}"
 
-    def canary(d: dict) -> str:
-        """One-line host_canary verdict (VERDICT r13 task 7): every
-        diff self-adjudicates host health in one read. Pre-r13
-        artifacts carry no field; r13-era verdicts lack warm_healthy
-        and provenance — print what is there, never guess."""
-        c = d.get("host_canary")
-        if not isinstance(c, dict):
-            return "canary: (none)"
-        if "error" in c:
-            return f"canary: error={c['error']!r}"
-        bits = [f"healthy={c.get('healthy')}"]
-        if "warm_healthy" in c:
-            bits.append(f"warm_healthy={c.get('warm_healthy')}")
-        if "recorded_utc" in c:
-            bits.append(f"recorded={c['recorded_utc']}")
-        if "provenance_warning" in c:
-            bits.append(f"WARNING={c['provenance_warning']!r}")
-        return "canary: " + " ".join(bits)
-
     print(f"old: {on}  total={a['value']}s  keys={len(oq)}  "
-          f"errors={a.get('n_errors', 0)}  {stamp(a)}  {canary(a)}")
+          f"errors={a.get('n_errors', 0)}  {stamp(a)}")
     print(f"new: {nn}  total={b['value']}s  keys={len(nq)}  "
-          f"errors={b.get('n_errors', 0)}  {stamp(b)}  {canary(b)}")
+          f"errors={b.get('n_errors', 0)}  {stamp(b)}")
     proto_a = a.get("protocol", "cold-single-shot")
     proto_b = b.get("protocol", "cold-single-shot")
     proto_ok = proto_a == proto_b

@@ -29,8 +29,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from engine import ROOT  # noqa: E402
 from engine.registry import all_queries  # noqa: E402
 from engine.session import get_spark  # noqa: E402
 from tools.check import assert_scale_knobs_unset  # noqa: E402
@@ -65,12 +66,6 @@ def main() -> None:
     # Spark work so it reflects the box, not this sweep's own load
     load_start = os.getloadavg() if hasattr(os, "getloadavg") else None
     assert_scale_knobs_unset("a full-registry bench")
-    # VERDICT r12 task 3: canary verdict embedded in the artifact —
-    # subprocess (fresh JVM = the calibrated canary context) BEFORE
-    # this process builds its own session; see bench.py for rationale
-    from tools.host_canary import subprocess_verdict
-
-    canary = subprocess_verdict()
     args = [a for a in sys.argv[1:] if a != "--warm"]
     warm_mode = "--warm" in sys.argv[1:]
     rnd = int(args[0]) if args else 0
@@ -125,10 +120,9 @@ def main() -> None:
             [round(x, 2) for x in load_start] if load_start else None
         ),
         "load_avg": [round(x, 2) for x in load] if load else None,
-        "host_canary": canary,
     }
     stem = "BENCH_FULL_WARM" if warm_mode else "BENCH_FULL"
-    path = f"/root/repo/{stem}_r{rnd:02d}.json" if rnd else f"/root/repo/{stem}.json"
+    path = os.path.join(ROOT, f"{stem}_r{rnd:02d}.json" if rnd else f"{stem}.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
     print(f"\nwrote {path}: {out['value']}s over {out['n_keys']} keys")
@@ -147,14 +141,14 @@ def main() -> None:
         except ValueError:
             return -1
     prior_files = sorted(
-        (f for f in os.listdir("/root/repo")
+        (f for f in os.listdir(ROOT)
          if f.startswith(f"{stem}_r") and f.endswith(".json")
          and f != os.path.basename(path) and _round_of(f) >= 0),
         key=_round_of,
     )
     if prior_files:
         print()
-        print_diff(f"/root/repo/{prior_files[-1]}", path)
+        print_diff(os.path.join(ROOT, prior_files[-1]), path)
 
 
 if __name__ == "__main__":

@@ -11,12 +11,14 @@ the command line. Oracle-checked keys also run the complex-output gate
 Usage: python tools/driver_sim.py [extra_key ...]
 """
 import importlib.util
+import os
 import sys
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 # Same row normalization as the hardened checker: floats rounded before
 # keying the sort, so cross-engine rounding noise can't misalign rows.
 from tools.check import (  # noqa: E402
@@ -47,7 +49,7 @@ ROUND_CHANGED = [
 assert_scale_knobs_unset("a driver-sim run")
 
 
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(ROOT, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 

@@ -20,8 +20,9 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from engine import ROOT  # noqa: E402
 from engine.registry import all_queries  # noqa: E402
 from engine.session import get_spark  # noqa: E402
 
@@ -37,7 +38,7 @@ def main() -> None:
     tag, stage, *keys = sys.argv[1:]
     assert stage in ("before", "after"), stage
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan_dump")
     queries = all_queries()

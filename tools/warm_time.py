@@ -1,7 +1,6 @@
 """Targeted warm per-key timing: one shared warmed session, per key one
 untimed warm execution then N timed noop-sink runs, reporting the min —
-the SCALING.md warm-protocol rule (the only protocol citable when the
-host canary reads cold-sick). Usage:
+the SCALING.md warm-protocol rule. Usage:
 
     python tools/warm_time.py [-n 3] [sf_dir] key [key ...]
 
@@ -17,7 +16,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from engine.registry import all_queries  # noqa: E402
 from engine.session import get_spark  # noqa: E402
