@@ -4821,12 +4821,11 @@ def q_text_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_text_zipf discipline, `//` only).
 
     Scale shape: two hash aggregates (token→first-doc on the vocab,
-    tokens-per-doc on the corpus) and the BANDED prefix-sum
-    (engine.stats._banded_cum — parallel per-band windows + a
-    |bands|-row carry) over the |docs| growth curve; at extreme doc
+    tokens-per-doc on the corpus) and engine.stats.banded_cum over
+    the |docs| growth curve (doc_id bands of width 1024); at extreme doc
     counts the curve would be sampled at log-spaced checkpoints before
     the fit, which drops points, not exactness."""
-    from engine.stats import _banded_cum
+    from engine.stats import banded_cum
 
     d = _t(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
@@ -4840,7 +4839,9 @@ def q_text_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = nt.join(nv, "doc_id", "left").select(
         "doc_id", F.coalesce("nv", F.lit(0)).alias("nv"), "ntok"
     )
-    c = _banded_cum(base, "doc_id", ["nv", "ntok"], 1024)
+    c = banded_cum(
+        base, (F.col("doc_id") / 1024).cast("long"), ["doc_id"], ["nv", "ntok"]
+    )
     q = c.select(
         F.floor(F.log(F.col("cum_ntok").cast("double")) * 1000000)
         .cast("long")

@@ -1304,14 +1304,12 @@ def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties — the max-overlap convention; total order via user_id).
 
     A naive global running sum is a ONE-PARTITION window — the r1
-    anti-pattern. This is the distributed two-level prefix sum instead:
-    boundaries partition by UTC day, the within-day running sum is an
-    ordinary day-partitioned window, and each day's carry-in offset
-    comes from the cumulative day totals — a table with one row per
-    DAY, so its ordering window is single-partition over ~tens of rows
-    (the q_win_ntile counts-table pattern), broadcast back to the
-    boundary rows. Same shape scales to any horizon: shuffle on day,
-    map-side window, O(days) driver-free carry composition."""
+    anti-pattern. This is engine.stats.banded_cum banded by UTC day
+    instead: the within-day running sum is a day-partitioned window and
+    the carry table has one row per DAY, so its window is
+    single-partition over ~tens of rows only."""
+    from engine.stats import banded_cum
+
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_micros("ts").alias("us")
     )
@@ -1333,26 +1331,9 @@ def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         iv.select("user_id", F.col("e_us").alias("us"), F.lit(-1).alias("delta"))
     )
     day = (F.col("us") / F.lit(86_400_000_000)).cast("long")
-    b = b.withColumn("day", day)
-    wd = Window.partitionBy("day").orderBy(
-        F.asc("us"), F.desc("delta"), F.asc("user_id")
-    )
-    within = F.sum("delta").over(wd.rowsBetween(Window.unboundedPreceding, 0))
-    # one row per day: cumulative carry-in from all earlier days
-    day_totals = b.groupBy("day").agg(F.sum("delta").alias("day_total"))
-    wdays = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = day_totals.select(
-        "day", F.coalesce(F.sum("day_total").over(wdays), F.lit(0)).alias("carry")
-    )
-    return (
-        b.withColumn("within", within)
-        .join(F.broadcast(offsets), "day")
-        .select(
-            "us",
-            "user_id",
-            "delta",
-            (F.col("within") + F.col("carry")).cast("long").alias("concurrent"),
-        )
+    order = [F.asc("us"), F.desc("delta"), F.asc("user_id")]
+    return banded_cum(b, day, order, ["delta"]).select(
+        "us", "user_id", "delta", F.col("cum_delta").alias("concurrent")
     )
 
 
@@ -1651,14 +1632,16 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fully relational and DISTRIBUTED: scores collapse to per-score tie
     groups (one hash agg), the global rank prefix over the group table
-    runs as the same two-level banded prefix sum as q_abc_pareto
-    (floor(score*64) band key — equal scores share a band, so average
-    ranks of tie groups stay exact), and AUC is closed-form from the
+    is engine.stats.banded_cum on a floor(score*64) band (equal scores
+    share a band, so average ranks of tie groups stay exact) minus the
+    group's own count, and AUC is closed-form from the
     exact (n, npos, cum_before) integers. The oracle writes the naive
     single-partition running-sum window; the plans differ, the relation
     does not. Average-rank tie handling makes the statistic exact for
     ANY tie structure, not just distinct scores.
     """
+    from engine.stats import banded_cum
+
     scored = (
         _t(spark, sf_dir, "embeddings")
         .select(
@@ -1666,36 +1649,12 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("label") % 2 == 1, 1).otherwise(0).alias("y"),
         )
     )
-    grp = (
-        scored.groupBy("score")
-        .agg(F.count("*").alias("n"), F.sum("y").cast("long").alias("npos"))
-        .withColumn("band", F.floor(F.col("score") * 64))
+    grp = scored.groupBy("score").agg(
+        F.count("*").alias("n"), F.sum("y").cast("long").alias("npos")
     )
-    w_in = Window.partitionBy("band").orderBy(F.asc("score")).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    within = grp.withColumn(
-        "run_in_band", F.coalesce(F.sum("n").over(w_in), F.lit(0))
-    )
-    band_tot = (
-        grp.groupBy("band")
-        .agg(F.sum("n").alias("band_n"))
-        .withColumn(
-            "carry_in",
-            F.coalesce(
-                F.sum("band_n").over(
-                    Window.orderBy(F.asc("band")).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select(F.col("band").alias("b"), "carry_in")
-    )
-    ranked = within.join(F.broadcast(band_tot), F.col("band") == F.col("b")).withColumn(
-        "cum_before", F.col("run_in_band") + F.col("carry_in")
-    )
+    ranked = banded_cum(
+        grp, F.floor(F.col("score") * 64), ["score"], ["n"]
+    ).withColumn("cum_before", F.col("cum_n") - F.col("n"))
     tot = ranked.agg(
         F.sum("npos").cast("long").alias("p"),
         (F.sum("n") - F.sum("npos")).cast("long").alias("q"),
@@ -4013,58 +3972,32 @@ def q_eval_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     capture, and at what multiple of random?"). Scores and labels
     follow the q_eval_auc fixture conventions.
 
-    The global DESC rank uses the q_user_lorenz banded scheme so the
-    data-sized relation is never single-partition-sorted: band on
-    floor(score·64) (bounded band count; descending band order
-    refines (score desc, vec_id)), row_number WITHIN each band, plus
-    the broadcast carry-in of higher bands' counts; deciles are
+    The global DESC rank is engine.stats.banded_cum of 1 in descending
+    floor(score·64) bands (bounded band count; descending band order
+    refines (score desc, vec_id)), so the data-sized relation is never
+    single-partition-sorted; its totals are n and p, deciles are
     closed-form from the exact rank, and gain/lift are single IEEE
     divisions of exact counts (lift via cum_pos·n / cum_n·p — one
     division, never a ratio of two rounded ratios)."""
+    from engine.stats import banded_cum
+
     s = _t(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.element_at("embedding", 1).cast("double").alias("score"),
         F.when(F.col("label") % 2 == 1, 1).otherwise(0).alias("y"),
     )
-    b = s.withColumn("_band", F.floor(F.col("score") * 64).cast("long"))
-    within = b.withColumn(
-        "_rn_in",
-        F.row_number().over(
-            Window.partitionBy("_band").orderBy(F.desc("score"), F.asc("vec_id"))
-        ),
-    )
-    bt = (
-        b.groupBy("_band")
-        .agg(F.count("*").alias("_bc"))
-        .withColumn(
-            "_carry",
-            F.coalesce(
-                F.sum("_bc").over(
-                    Window.orderBy(F.desc("_band")).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select(F.col("_band").alias("_b"), "_carry")
-    )
-    tot = F.broadcast(
-        s.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("y").cast("long").alias("p"),
-        )
-    )
-    r = (
-        within.join(F.broadcast(bt), F.col("_band") == F.col("_b"))
-        .withColumn("rn", (F.col("_carry") + F.col("_rn_in")).cast("long"))
-        .crossJoin(tot)
+    r = banded_cum(
+        s,
+        F.floor(F.col("score") * 64).cast("long"),
+        [F.desc("score"), F.asc("vec_id")],
+        {"rn": F.lit(1), "y": F.col("y")},
+        descending=True,
     )
     d = r.select(
-        (F.expr("((rn - 1) * 10) div n") + 1).cast("long").alias("decile"),
+        (F.expr("((cum_rn - 1) * 10) div tot_rn") + 1).cast("long").alias("decile"),
         "y",
-        "n",
-        "p",
+        F.col("tot_rn").alias("n"),
+        F.col("tot_y").alias("p"),
     )
     g = d.groupBy("decile").agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -4613,9 +4546,10 @@ def q_eval_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the max ECDF gap evaluates as the integer cross-product
     |cum_pos·n_neg − cum_neg·n_pos| on the 1e-6 score grid; the
     argmax tie-breaks to the smallest score via the lexicographic
-    struct-max; one division at the end. The cumulative pass is the
-    banded prefix-sum — no global single-partition window."""
-    from engine.stats import _banded_cum
+    struct-max; one division at the end. The cumulative pass is
+    engine.stats.banded_cum, whose totals are the class sizes — no
+    global single-partition window."""
+    from engine.stats import banded_cum
 
     p6 = F.floor(
         F.greatest(
@@ -4634,17 +4568,13 @@ def q_eval_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("y") == 0, 1)).cast("long").alias("nn"),
         )
     )
-    w = _banded_cum(g, "p6", ["np", "nn"], 1 << 14)
-    tot = g.agg(
-        F.sum("np").cast("long").alias("n_pos"),
-        F.sum("nn").cast("long").alias("n_neg"),
-    )
-    d = w.crossJoin(F.broadcast(tot)).select(
-        "n_pos",
-        "n_neg",
+    w = banded_cum(g, (F.col("p6") / (1 << 14)).cast("long"), ["p6"], ["np", "nn"])
+    d = w.select(
+        F.col("tot_np").alias("n_pos"),
+        F.col("tot_nn").alias("n_neg"),
         F.abs(
-            F.col("cum_np").cast("decimal(38,0)") * F.col("n_neg")
-            - F.col("cum_nn").cast("decimal(38,0)") * F.col("n_pos")
+            F.col("cum_np").cast("decimal(38,0)") * F.col("tot_nn")
+            - F.col("cum_nn").cast("decimal(38,0)") * F.col("tot_np")
         ).alias("dn"),
         (-F.col("p6")).alias("np6"),
     )

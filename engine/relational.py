@@ -1728,23 +1728,17 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     One customer⋈orders aggregate builds the per-customer RFM triple.
     The oracle writes three global ``ntile(5)`` windows over that
     table; the Spark plan computes the IDENTICAL assignment fully
-    distributed via the house banded global-rank scheme (the
-    q_abc_pareto / q_agg_gini two-level prefix pattern): per dimension,
-    band the rows on a key consistent with the sort order (recency and
-    frequency band on their own small-integer value; monetary on
-    floor(log2(cents)) — ≤64 bands whose order refines cents DESC),
-    take ``row_number`` WITHIN each band (window partitioned by band —
-    parallel), and add the carry-in count of all earlier bands (a
-    band-sized aggregate, windowed small and broadcast back). The
-    global rank rn then maps to its quintile in closed form — with
-    n rows, base = n div 5, rem = n mod 5, the first rem tiles hold
-    base+1 rows — so no single-partition pass ever touches the
-    |customers|-sized table; the only global windows are over the
-    band-count tables and the only cross join is the 1-row n fold.
-    A custkey tiebreak makes each total order deterministic on both
-    engines; exact integer cents keep the cell averages float-free.
+    distributed: per dimension, the global row number is
+    engine.stats.banded_cum of 1 over a band consistent with the sort
+    order (recency and frequency band on their own small-integer
+    value; monetary on floor(log2(cents)) — ≤64 bands whose order
+    refines cents DESC), and engine.stats.closed_ntile maps it to its
+    quintile, so no single-partition pass ever touches the
+    |customers|-sized table. A custkey tiebreak makes each total order
+    deterministic on both engines; exact integer cents keep the cell
+    averages float-free.
     """
-    from pyspark.sql import Window
+    from engine.stats import banded_cum, closed_ntile
 
     cust = (
         _t(spark, sf_dir, "customer")
@@ -1759,73 +1753,23 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "monetary_cents"
             ),
         )
-        .persist()
     )
 
-    def _rank(df: DataFrame, band, within_order, band_desc: bool, name: str):
-        """Global row_number over (band order, within_order) as
-        within-band row_number + broadcast carry-in of earlier bands."""
-        b = df.withColumn("_band", band)
-        within = b.withColumn(
-            "_rn_in",
-            F.row_number().over(Window.partitionBy("_band").orderBy(*within_order)),
-        )
-        border = F.desc("_band") if band_desc else F.asc("_band")
-        bt = (
-            b.groupBy("_band")
-            .agg(F.count("*").alias("_bc"))
-            .withColumn(
-                "_carry",
-                F.coalesce(
-                    F.sum("_bc").over(
-                        Window.orderBy(border).rowsBetween(
-                            Window.unboundedPreceding, -1
-                        )
-                    ),
-                    F.lit(0),
-                ),
-            )
-            .select(F.col("_band").alias("_b"), "_carry")
-        )
-        return (
-            within.join(F.broadcast(bt), F.col("_band") == F.col("_b"))
-            .withColumn(name, (F.col("_carry") + F.col("_rn_in")).cast("long"))
-            .drop("_band", "_b", "_rn_in", "_carry", "_bc")
-        )
-
-    ranked = _rank(cust, F.col("recency"), [F.asc("c_custkey")], False, "rn_r")
-    ranked = _rank(ranked, F.col("frequency"), [F.asc("c_custkey")], True, "rn_f")
-    ranked = _rank(
+    ranked = banded_cum(cust, F.col("recency"), ["c_custkey"], {"r": F.lit(1)})
+    ranked = banded_cum(
+        ranked, F.col("frequency"), ["c_custkey"], {"f": F.lit(1)}, descending=True
+    )
+    ranked = banded_cum(
         ranked,
         F.floor(F.log2(F.col("monetary_cents").cast("double") + 1.5)),
         [F.desc("monetary_cents"), F.asc("c_custkey")],
-        True,
-        "rn_m",
+        {"m": F.lit(1)},
+        descending=True,
     )
-    ranked = ranked.crossJoin(
-        F.broadcast(cust.agg(F.count("*").cast("long").alias("_n")))
-    )
-
-    def _tile(rn: str):
-        # ntile(5) in closed form from the exact global rank: the first
-        # (n mod 5) tiles hold (n div 5)+1 rows, the rest (n div 5).
-        n = F.col("_n")
-        base = F.floor(n / F.lit(5)).cast("long")
-        rem = (n % 5).cast("long")
-        cut = rem * (base + 1)
-        r = F.col(rn)
-        return (
-            F.when(r <= cut, F.floor((r - 1) / (base + 1)))
-            .otherwise(rem + F.floor((r - cut - 1) / base))
-            + 1
-        ).cast("int")
-
     scored = ranked.select(
         "c_custkey",
         "monetary_cents",
-        _tile("rn_r").alias("r"),
-        _tile("rn_f").alias("f"),
-        _tile("rn_m").alias("m"),
+        *[closed_ntile(F.col(f"cum_{d}"), F.col("tot_m"), 5).alias(d) for d in "rfm"],
     )
     return (
         scored.groupBy("r", "f", "m")
@@ -1873,19 +1817,15 @@ def q_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite whose core is a GLOBAL ordered prefix sum.
 
     The oracle writes the naive global running-sum window; the Spark
-    plan computes the identical prefix sum DISTRIBUTED via the same
-    two-level scheme as q_concurrency, with a deterministic outer key:
-    band = floor(log2(cents)). Bands are totally ordered consistently
-    with the (cents DESC, partkey) sort (within a band cents sorts
-    normally; any higher band's every value exceeds any lower band's),
-    so prefix sum = within-band running sum (window partitioned by
-    band — parallel across bands) + the running total of higher bands
-    (a ≤64-row per-band aggregate, windowed and broadcast back). No
-    single-partition pass ever touches the |parts|-sized table; the
-    ≤64-row band table is the only global window. Exact cents make the
-    0.8/0.95 boundary comparisons cross-engine stable.
+    plan computes the identical prefix sum and total DISTRIBUTED with
+    engine.stats.banded_cum on band = floor(log2(cents)), ordered DESC.
+    Bands are totally ordered consistently with the (cents DESC,
+    partkey) sort (any higher band's every value exceeds any lower
+    band's), so no single-partition pass ever touches the |parts|-sized
+    table; the ≤64-row band table is the only global window. Exact
+    cents make the 0.8/0.95 boundary comparisons cross-engine stable.
     """
-    from pyspark.sql import Window
+    from engine.stats import banded_cum
 
     rev = (
         _t(spark, sf_dir, "lineitem")
@@ -1895,35 +1835,15 @@ def q_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        # log2 band: higher band <=> strictly larger cents range, so
-        # (band DESC, cents DESC, partkey) == (cents DESC, partkey)
-        .withColumn("band", F.floor(F.log2(F.col("cents").cast("double") + 1.5)))
     )
-    w_in = Window.partitionBy("band").orderBy(
-        F.desc("cents"), F.asc("l_partkey")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    within = rev.withColumn("run_in_band", F.sum("cents").over(w_in))
-    band_tot = (
-        rev.groupBy("band")
-        .agg(F.sum("cents").alias("band_cents"))
-        .withColumn(
-            "carry_in",
-            F.coalesce(
-                F.sum("band_cents").over(
-                    Window.orderBy(F.desc("band")).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .withColumn("total_cents", F.sum("band_cents").over(Window.partitionBy()))
-        .select(F.col("band").alias("b"), "carry_in", "total_cents")
+    ranked = banded_cum(
+        rev,
+        F.floor(F.log2(F.col("cents").cast("double") + 1.5)),
+        [F.desc("cents"), F.asc("l_partkey")],
+        ["cents"],
+        descending=True,
     )
-    ranked = within.join(
-        F.broadcast(band_tot), F.col("band") == F.col("b")
-    ).withColumn("run_cents", F.col("run_in_band") + F.col("carry_in"))
-    share = F.col("run_cents").cast("double") / F.col("total_cents")
+    share = F.col("cum_cents").cast("double") / F.col("tot_cents")
     return (
         ranked.select(
             F.when(share <= 0.8, "A").when(share <= 0.95, "B").otherwise("C").alias(
@@ -2300,17 +2220,16 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure (0 = equal spend, →1 = one customer is the business):
     G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n over ascending-sorted spend.
 
-    The global rank i over |customers| runs DISTRIBUTED via the banded
-    scheme (q_eval_auc's): per-customer cents aggregate once, band =
+    The global rank i over |customers| runs DISTRIBUTED: per-customer
+    cents aggregate once, then engine.stats.banded_cum of 1 on band =
     floor(log2(cents+1.5)) (order-consistent with cents ASC — the
-    q_abc_pareto property), within-band row_number + a ≤64-row
-    carry-count broadcast; Σ(i·xᵢ) then sums exact bigints (i ≤ n,
+    q_abc_pareto property); Σ(i·xᵢ) then sums exact bigints (i ≤ n,
     cents ≤ ~1e9 → products ≤ ~1e15·SF, inside bigint at any fixture
     SF; at true 100 TB scale the product pre-scales like
     q_anomaly_seasonal's Σc²). The ties-broken (cents, custkey) order
     matches the oracle's row_number exactly.
     """
-    from pyspark.sql import Window
+    from engine.stats import banded_cum
 
     cust = (
         _t(spark, sf_dir, "orders")
@@ -2319,29 +2238,13 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.floor(F.col("o_totalprice") * 100)).cast("long").alias("cents")
         )
-        .withColumn("band", F.floor(F.log2(F.col("cents").cast("double") + 1.5)))
     )
-    w_in = Window.partitionBy("band").orderBy("cents", "c_custkey")
-    within = cust.withColumn("rn_in", F.row_number().over(w_in))
-    band_cnt = (
-        cust.groupBy("band")
-        .agg(F.count("*").alias("bn"))
-        .withColumn(
-            "carry",
-            F.coalesce(
-                F.sum("bn").over(
-                    Window.orderBy("band").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select(F.col("band").alias("b2"), "carry")
-    )
-    ranked = within.join(F.broadcast(band_cnt), F.col("band") == F.col("b2")).select(
-        "cents", (F.col("rn_in") + F.col("carry")).alias("i")
-    )
+    ranked = banded_cum(
+        cust,
+        F.floor(F.log2(F.col("cents").cast("double") + 1.5)),
+        ["cents", "c_custkey"],
+        {"i": F.lit(1)},
+    ).select("cents", F.col("cum_i").alias("i"))
     agg = ranked.agg(
         F.count("*").alias("n"),
         F.sum("cents").cast("long").alias("total"),
@@ -3315,63 +3218,32 @@ def q_user_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     single number — 'the top decile carries X% of revenue').
 
     Deciles come CLOSED-FORM from the exact global rank
-    (((rn−1)·10) div n); the rank itself is the q_rfm_segments /
-    q_abc_pareto banded scheme — band customers on floor(log2(cents))
-    (≤64 bands whose ascending order refines (m, custkey)), take
-    row_number WITHIN each band (parallel window), and add the
-    broadcast carry-in of earlier bands' counts, so the
+    (((rn−1)·10) div n); the rank, n and the revenue total come from
+    one engine.stats.banded_cum on floor(log2(cents)) bands (≤64 bands
+    whose ascending order refines (m, custkey)), so the
     |customers|-sized relation is never globally sorted on one
     partition. The only single-partition stages are the ≤64-row band
-    carry window and the 10-row cumulative decile window; the only
-    cross join is the 1-row (n, total) fold. Shares are ratios of
-    exact integer cent sums rounded once for display."""
+    carry window and the 10-row cumulative decile window. Shares are
+    ratios of exact integer cent sums rounded once for display."""
     from pyspark.sql import Window
+
+    from engine.stats import banded_cum
 
     u = (
         _t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.sum(F.floor(F.col("o_totalprice") * 100)).cast("long").alias("m"))
     )
-    b = u.withColumn(
-        "_band", F.floor(F.log2(F.col("m").cast("double") + 1.5))
-    )
-    within = b.withColumn(
-        "_rn_in",
-        F.row_number().over(
-            Window.partitionBy("_band").orderBy(F.asc("m"), F.asc("o_custkey"))
-        ),
-    )
-    bt = (
-        b.groupBy("_band")
-        .agg(F.count("*").alias("_bc"))
-        .withColumn(
-            "_carry",
-            F.coalesce(
-                F.sum("_bc").over(
-                    Window.orderBy(F.asc("_band")).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select(F.col("_band").alias("_b"), "_carry")
-    )
-    tot = F.broadcast(
-        u.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("m").cast("long").alias("total"),
-        )
-    )
-    r = (
-        within.join(F.broadcast(bt), F.col("_band") == F.col("_b"))
-        .withColumn("rn", (F.col("_carry") + F.col("_rn_in")).cast("long"))
-        .crossJoin(tot)
+    r = banded_cum(
+        u,
+        F.floor(F.log2(F.col("m").cast("double") + 1.5)),
+        ["m", "o_custkey"],
+        {"rn": F.lit(1), "m": F.col("m")},
     )
     d = r.select(
-        (F.expr("((rn - 1) * 10) div n") + 1).cast("long").alias("decile"),
+        (F.expr("((cum_rn - 1) * 10) div tot_rn") + 1).cast("long").alias("decile"),
         "m",
-        "total",
+        F.col("tot_m").alias("total"),
     )
     g = d.groupBy("decile").agg(
         F.count("*").cast("long").alias("n_customers"),
@@ -3579,55 +3451,33 @@ def q_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning grid (AX = automate, CZ = review manually) that
     operations teams actually run.
 
-    The ABC rank reuses the banded distributed prefix-sum (≤64 log2
-    bands, within-band running sum + broadcast carry — the oracle
-    writes the naive global window, the plan never single-partitions
-    the parts table). The XYZ class counts ZERO-DEMAND weeks via the
-    global horizon W (a 1-row fold): cv² = (W·Σq²−(Σq)²)/(Σq)², and
+    The ABC rank is q_abc_pareto's engine.stats.banded_cum over ≤64
+    log2 bands (the oracle writes the naive global window, the plan
+    never single-partitions the parts table). The XYZ class counts
+    ZERO-DEMAND weeks via the global horizon W (a 1-row fold):
+    cv² = (W·Σq²−(Σq)²)/(Σq)², and
     the class test cross-multiplies (varn ≤ k·(Σq)²) so it is an
     EXACT 128-bit integer comparison — no float cv ever computed."""
-    from pyspark.sql import Window
+    from engine.stats import banded_cum
 
     li = _t(spark, sf_dir, "lineitem")
-    rev = (
-        li.groupBy("l_partkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-            )
-            .cast("long")
-            .alias("cents")
-        )
-        .withColumn("band", F.floor(F.log2(F.col("cents").cast("double") + 1.5)))
+    rev = li.groupBy("l_partkey").agg(
+        F.sum(F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100))
+        .cast("long")
+        .alias("cents")
     )
-    w_in = Window.partitionBy("band").orderBy(
-        F.desc("cents"), F.asc("l_partkey")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    within = rev.withColumn("run_in_band", F.sum("cents").over(w_in))
-    band_tot = (
-        rev.groupBy("band")
-        .agg(F.sum("cents").alias("band_cents"))
-        .withColumn(
-            "carry_in",
-            F.coalesce(
-                F.sum("band_cents").over(
-                    Window.orderBy(F.desc("band")).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .withColumn("total_cents", F.sum("band_cents").over(Window.partitionBy()))
-        .select(F.col("band").alias("b"), "carry_in", "total_cents")
+    ranked = banded_cum(
+        rev,
+        F.floor(F.log2(F.col("cents").cast("double") + 1.5)),
+        [F.desc("cents"), F.asc("l_partkey")],
+        ["cents"],
+        descending=True,
     )
-    share = (F.col("run_in_band") + F.col("carry_in")).cast("double") / F.col(
-        "total_cents"
-    )
-    abc = within.join(F.broadcast(band_tot), F.col("band") == F.col("b")).select(
+    share = F.col("cum_cents").cast("double") / F.col("tot_cents")
+    abc = ranked.select(
         "l_partkey",
         "cents",
-        "total_cents",
+        F.col("tot_cents").alias("total_cents"),
         F.when(share <= 0.8, "A").when(share <= 0.95, "B").otherwise("C").alias(
             "abc_class"
         ),

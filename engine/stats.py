@@ -24,7 +24,9 @@ Scale design (100 TB intent):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Mapping, Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.io import load_table
@@ -494,46 +496,80 @@ def q_stats_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _banded_cum(df: DataFrame, order_col: str, sum_cols: list[str], band_width: int):
-    """Distributed inclusive prefix-sums of ``sum_cols`` in ``order_col``
-    order WITHOUT a single global window: rows band by
-    ``order_col div band_width``; each band cumulates internally
-    (parallel across bands), band totals cumulate in one tiny window
-    (|bands| rows, bounded by the value domain / band_width), and the
-    exclusive carry broadcasts back — the q_rfm_segments banded-rank
-    scheme generalized to sums. Adds ``cum_<c>`` (inclusive) per input
-    column."""
+def banded_cum(
+    df: DataFrame,
+    band: Column,
+    order: list[Column | str],
+    sums: Sequence[str] | Mapping[str, Column],
+    descending: bool = False,
+) -> DataFrame:
+    """Global inclusive prefix sums in ``order`` without a global sort —
+    the two-level "banded" scheme every data-sized rank and running sum
+    in the engine uses.
+
+    Precondition: ``band`` is consistent with ``order`` — in ascending
+    band order (descending when ``descending``), every row of an earlier
+    band precedes every row of a later one — and ``order`` (sort
+    columns such as ``F.desc("x")``; names sort ascending) is a total
+    order within each band, ties broken by a unique key.
+
+    Plan: one window partitioned by band sums within each band, in
+    parallel; one ``groupBy(band)`` totals the bands; one window over
+    that table (at most |bands| rows) turns the totals into each band's
+    exclusive carry and the grand total; one broadcast join brings them
+    back. The join is null-safe, so a NULL band keeps its rows and sorts
+    first ascending and last descending, as Spark sorts NULLs.
+
+    ``sums`` names the summed columns, or maps names to expressions
+    (``{"rn": F.lit(1)}`` makes ``cum_rn`` the global row number). For
+    each name the result adds ``cum_<c>`` (inclusive prefix sum) and
+    ``tot_<c>`` (grand total)."""
     from pyspark.sql import Window
 
-    b = df.withColumn("_band", (F.col(order_col) / band_width).cast("long"))
+    if not isinstance(sums, Mapping):
+        sums = {c: F.col(c) for c in sums}
+    b = df.withColumn("_band", band)
     win = (
         Window.partitionBy("_band")
-        .orderBy(order_col)
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    within = b.select(
-        "*", *[F.sum(c).over(win).cast("long").alias(f"_in_{c}") for c in sum_cols]
+    within = b.select("*", *[F.sum(e).over(win).alias(f"_in_{c}") for c, e in sums.items()])
+    bands = Window.orderBy(F.desc("_band") if descending else F.asc("_band"))
+    carry = bands.rowsBetween(Window.unboundedPreceding, -1)
+    total = bands.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    bt = b.groupBy("_band").agg(*[F.sum(e).alias(f"_bt_{c}") for c, e in sums.items()])
+    bt = bt.select(
+        F.col("_band").alias("_cb"),
+        *[
+            F.coalesce(F.sum(f"_bt_{c}").over(carry), F.lit(0)).alias(f"_carry_{c}")
+            for c in sums
+        ],
+        *[F.sum(f"_bt_{c}").over(total).alias(f"tot_{c}") for c in sums],
     )
-    carry_win = Window.orderBy("_band").rowsBetween(Window.unboundedPreceding, -1)
-    bt = (
-        b.groupBy("_band")
-        .agg(*[F.sum(c).cast("long").alias(f"_bt_{c}") for c in sum_cols])
-        .select(
-            F.col("_band").alias("_cb"),
-            *[
-                F.coalesce(F.sum(f"_bt_{c}").over(carry_win), F.lit(0))
-                .cast("long")
-                .alias(f"_carry_{c}")
-                for c in sum_cols
-            ],
-        )
+    out = within.join(F.broadcast(bt), F.col("_band").eqNullSafe(F.col("_cb")))
+    return out.select(
+        *df.columns,
+        *[(F.col(f"_carry_{c}") + F.col(f"_in_{c}")).alias(f"cum_{c}") for c in sums],
+        *[f"tot_{c}" for c in sums],
     )
-    out = within.join(F.broadcast(bt), F.col("_band") == F.col("_cb"))
-    for c in sum_cols:
-        out = out.withColumn(f"cum_{c}", F.col(f"_carry_{c}") + F.col(f"_in_{c}"))
-    return out.drop(
-        "_band", "_cb", *[f"_in_{c}" for c in sum_cols], *[f"_carry_{c}" for c in sum_cols]
-    )
+
+
+def closed_ntile(rn: Column, n: Column, k: int) -> Column:
+    """``ntile(k)`` of the 1-based global rank ``rn`` among ``n`` rows,
+    in closed form: the first ``n mod k`` tiles hold ``n div k + 1``
+    rows, the rest ``n div k``. With n < k every rank takes the first
+    branch; the second branch's divisor is still pinned >= 1 so no
+    input yields a NULL tile through a 0 division."""
+    r = rn - 1
+    base = (n / k).cast("long")
+    rem = n % k
+    head = rem * (base + 1)  # ranks covered by the size-(base+1) tiles
+    return (
+        F.when(r < head, (r / (base + 1)).cast("long"))
+        .otherwise(rem + ((r - head) / F.greatest(base, F.lit(1))).cast("long"))
+        + 1
+    ).cast("int")
 
 
 def _ks_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -610,22 +646,20 @@ def q_stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-max idiom of q_agg_argmax).
 
     Scale shape: one hash aggregate collapses the fact table to
-    distinct cent values (domain-bounded); the cumulative pass is the
-    BANDED prefix-sum (:func:`_banded_cum`) — per-band windows in
-    parallel plus a |bands|-row carry — so no single-partition global
-    window touches the distinct-value relation; the final max is a
-    plain aggregate with map-side combine."""
+    distinct cent values (domain-bounded); the cumulative pass is
+    :func:`banded_cum` over cents bands of width 2^16, whose totals are
+    the sample sizes; the final max is a plain aggregate with map-side
+    combine."""
     g = _ks_grouped(spark, sf_dir)
-    w = _banded_cum(g, "cents", ["na", "nb"], 1 << 16)
-    tot = g.agg(
-        F.sum("na").cast("long").alias("n_a"), F.sum("nb").cast("long").alias("n_b")
+    w = banded_cum(
+        g, (F.col("cents") / (1 << 16)).cast("long"), ["cents"], ["na", "nb"]
     )
-    d = w.crossJoin(F.broadcast(tot)).select(
-        "n_a",
-        "n_b",
+    d = w.select(
+        F.col("tot_na").alias("n_a"),
+        F.col("tot_nb").alias("n_b"),
         F.abs(
-            F.col("cum_na").cast("decimal(38,0)") * F.col("n_b")
-            - F.col("cum_nb").cast("decimal(38,0)") * F.col("n_a")
+            F.col("cum_na").cast("decimal(38,0)") * F.col("tot_nb")
+            - F.col("cum_nb").cast("decimal(38,0)") * F.col("tot_na")
         ).alias("dn"),
         (-F.col("cents")).alias("nc"),
     )
@@ -700,8 +734,11 @@ def q_stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after the distinct-value aggregate is one re-aggregate.
     """
     g = _ks_grouped(spark, sf_dir)
-    w = _banded_cum(
-        g.withColumn("t", F.col("na") + F.col("nb")), "cents", ["t"], 1 << 16
+    w = banded_cum(
+        g.withColumn("t", F.col("na") + F.col("nb")),
+        (F.col("cents") / (1 << 16)).cast("long"),
+        ["cents"],
+        ["t"],
     ).withColumn("before", F.col("cum_t") - F.col("t"))
     tot = g.agg(
         F.sum("na").cast("long").alias("n_a"), F.sum("nb").cast("long").alias("n_b")
@@ -949,11 +986,11 @@ def q_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rank2_map(df: DataFrame, col: str, band_width: int) -> DataFrame:
     """Value → DOUBLED average tie-rank map for ``col``: one hash
-    aggregate to distinct values, banded prefix sum of the counts
-    (:func:`_banded_cum`), and r2 = 2·before + t + 1 — an exact
-    integer for any tie pattern. Returns (col, r2)."""
+    aggregate to distinct values, :func:`banded_cum` of the counts,
+    and r2 = 2·before + t + 1 — an exact integer for any tie pattern.
+    Returns (col, r2)."""
     g = df.groupBy(col).agg(F.count("*").cast("long").alias("t"))
-    c = _banded_cum(g, col, ["t"], band_width)
+    c = banded_cum(g, (F.col(col) / band_width).cast("long"), [col], ["t"])
     return c.select(
         col, (2 * (F.col("cum_t") - F.col("t")) + F.col("t") + 1).alias("r2")
     )
@@ -1016,7 +1053,7 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     double is the final rounded ratio.
 
     Scale shape: each variable's rank map is one distinct-value hash
-    aggregate + the banded prefix sum (value-domain-bounded); the maps
+    aggregate + :func:`banded_cum` (value-domain-bounded); the maps
     hash-join back to the fact rows (the quantity map is tiny and
     broadcasts; the price map is domain-bounded); one moment aggregate
     ends it. No global window, no sort of the fact table."""
@@ -3887,8 +3924,9 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment folds. H evaluates once, in doubles, by the identical
     expression tree on both engines.
 
-    Plan: one value-level hash agg, the banded exclusive prefix
-    (never a global single-partition window), one domain-sized join
+    Plan: one value-level hash agg, the exclusive prefix as
+    :func:`banded_cum` minus the row's own count (never a global
+    single-partition window), one domain-sized join
     back, one 5-row aggregate."""
     o = load_table(spark, sf_dir, "orders")
     v = o.select(
@@ -3897,9 +3935,9 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gv = v.groupBy("grp", "cents").agg(F.count("*").cast("long").alias("c"))
     tv = gv.groupBy("cents").agg(F.sum("c").cast("long").alias("t"))
-    tv = _banded_cum(tv, "cents", ["t"], 1 << 16).withColumn(
-        "before", F.col("cum_t") - F.col("t")
-    )
+    tv = banded_cum(
+        tv, (F.col("cents") / (1 << 16)).cast("long"), ["cents"], ["t"]
+    ).withColumn("before", F.col("cum_t") - F.col("t"))
     dec = lambda c_: F.col(c_).cast("decimal(38,0)")  # noqa: E731
     rj = (
         gv.join(tv.select("cents", "t", "before"), "cents")
@@ -4215,7 +4253,7 @@ def q_stats_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction.
 
     The per-group doubled rank sums and the tie term are exact
-    128-bit integers (one value-level aggregate + banded prefix);
+    128-bit integers (one value-level aggregate + :func:`banded_cum`);
     the pairwise z evaluates once per pair in doubles by the
     identical expression tree on both engines, and the significance
     cut compares against the Bonferroni critical CONSTANT (z for
@@ -4227,9 +4265,9 @@ def q_stats_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gv = v.groupBy("grp", "cents").agg(F.count("*").cast("long").alias("c"))
     tv = gv.groupBy("cents").agg(F.sum("c").cast("long").alias("t"))
-    tv = _banded_cum(tv, "cents", ["t"], 1 << 16).withColumn(
-        "before", F.col("cum_t") - F.col("t")
-    )
+    tv = banded_cum(
+        tv, (F.col("cents") / (1 << 16)).cast("long"), ["cents"], ["t"]
+    ).withColumn("before", F.col("cum_t") - F.col("t"))
     dec = lambda c_: F.col(c_).cast("decimal(38,0)")  # noqa: E731
     rj = (
         gv.join(tv.select("cents", "t", "before"), "cents")
@@ -4341,8 +4379,8 @@ def q_stats_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: paired sums and differences are exact cents; zero
     differences drop (the standard treatment); |d| ranks are DOUBLED
-    integers with average-tie handling over the banded... the value
-    domain here is per-customer diffs, aggregated value-level first;
+    integers with average-tie handling over :func:`banded_cum` of the
+    |d| counts, aggregated value-level first;
     W⁺ accumulates as 128-bit; z evaluates once in doubles by the
     identical tree (σ² uses the Σ(t³−t)/48 tie correction)."""
     o = load_table(spark, sf_dir, "orders")
@@ -4369,9 +4407,9 @@ def q_stats_wilcoxon(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("t"),
         F.sum("pos").cast("long").alias("tp"),
     )
-    g = _banded_cum(g, "ad", ["t"], 1 << 20).withColumn(
-        "before", F.col("cum_t") - F.col("t")
-    )
+    g = banded_cum(
+        g, (F.col("ad") / (1 << 20)).cast("long"), ["ad"], ["t"]
+    ).withColumn("before", F.col("cum_t") - F.col("t"))
     dec = lambda c_: F.col(c_).cast("decimal(38,0)")  # noqa: E731
     s = g.agg(
         F.sum("t").cast("long").alias("n"),

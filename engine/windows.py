@@ -47,63 +47,26 @@ def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quartiles of account balance — distributed 2-pass ntile.
+    """Quartiles of account balance without a global sort.
 
     ``ntile(4) OVER (ORDER BY ...)`` with no PARTITION BY funnels the
-    whole table through one WindowExec task. Scale-safe equivalent:
+    whole table through one WindowExec task. Instead the global row
+    number and row count come from engine.stats.banded_cum over
+    floor(c_acctbal / 100) bands — TPC-H bounds c_acctbal to
+    [-999.99, 9999.99], so at most 111 bands at any scale — and
+    engine.stats.closed_ntile maps the rank to its quartile. Building
+    the frame launches no Spark job."""
+    from engine.stats import banded_cum, closed_ntile
 
-    1. range-partition on the order key (so partition i's keys all
-       precede partition i+1's);
-    2. local ``row_number`` within each partition (per-partition work);
-    3. global rank = local rank + offset, where offsets are a running
-       sum over the *per-partition counts* (a partition-count-sized
-       window, not a data-sized one) broadcast back;
-    4. the quartile follows arithmetically from the global rank and the
-       total count: the first n%4 buckets get n/4+1 rows, the rest n/4
-       — exactly NTILE's distribution.
-
-    Identical output to the single-window form, no single-task stage."""
     c = _t(spark, sf_dir, "customer")
-    order = [F.asc("c_acctbal"), F.asc("c_custkey")]
-    ranged = c.repartitionByRange(32, *order).withColumn("pid", F.spark_partition_id())
-    local = ranged.withColumn(
-        "lrn", F.row_number().over(Window.partitionBy("pid").orderBy(*order))
+    r = banded_cum(
+        c,
+        F.floor(F.col("c_acctbal") / 100),
+        ["c_acctbal", "c_custkey"],
+        {"rn": F.lit(1)},
     )
-    # `local` feeds two consumers (the counts->offsets branch and the
-    # final join). Both must observe the SAME physical range
-    # partitioning: RangePartitioner samples with an RDD-id-derived
-    # seed, so two independent executions of the exchange could pick
-    # different boundaries and silently misalign offsets vs ranks.
-    # localCheckpoint(eager) materializes the partitioning exactly once;
-    # both branches then read the pinned blocks.
-    local = local.localCheckpoint(eager=True)
-    counts = local.groupBy("pid").agg(F.count("*").alias("cnt"))
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    wtot = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offs = counts.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(woff), F.lit(0)).alias("off"),
-        F.sum("cnt").over(wtot).alias("n_total"),
-    )
-    r = F.col("off") + F.col("lrn") - 1  # 0-based global rank
-    base = (F.col("n_total") / 4).cast("long")
-    rem = F.col("n_total") % 4
-    head = rem * (base + 1)  # rows covered by the size-(base+1) buckets
-    # For n_total < 4: base = 0, rem = n, head = n, so every rank r in
-    # [0, n) takes the first branch (r / 1 -> buckets 1..n, NTILE's
-    # answer) and the base-divisor branch is unreachable. The divisor
-    # is still pinned >= 1 so no distribution can produce a NULL
-    # quartile through a 0 division.
-    quartile = (
-        F.when(r < head, (r / (base + 1)).cast("long"))
-        .otherwise(rem + ((r - head) / F.greatest(base, F.lit(1))).cast("long"))
-        + 1
-    )
-    return (
-        local.join(F.broadcast(offs), "pid")
-        .select("c_custkey", quartile.cast("int").alias("quartile"))
+    return r.select(
+        "c_custkey", closed_ntile(F.col("cum_rn"), F.col("tot_rn"), 4).alias("quartile")
     )
 
 

@@ -34,7 +34,7 @@ _SINGLE_PARTITION_OK: dict[str, str] = {
     "q_topk": "TakeOrderedAndProject gathers k rows",
     "q_limit_offset": "global LIMIT/OFFSET contract",
     "q_sort_multi": "global ORDER BY contract (rangepartitioning)",
-    "q_win_ntile": "2-pass rank: window over the 32-row counts table",
+    "q_win_ntile": "carry window over the <=111-row acctbal band table",
     "q_text_tfidf": "broadcast 1-row corpus-size aggregate",
     "q_sim_topk": "global top-k gather after per-partition sort",
     "q_sim_topk_lsh": "MLlib approxNearestNeighbors internal gather",
@@ -674,11 +674,11 @@ def test_late_r4_operator_plan_shapes(plans):
     # ABC: the parts-sized table sees only band-partitioned windows;
     # the single-partition stage exists only for the <=64-row band
     # totals (documented); the final class agg is a plain hash agg
-    assert "hashpartitioning(band" in plans["q_abc_pareto"]
+    assert "hashpartitioning(_band" in plans["q_abc_pareto"]
     # AUC: banded rank prefix — band-partitioned window over the
     # score-group table, carry joined back as a broadcast
     auc = plans["q_eval_auc"]
-    assert "hashpartitioning(band" in auc
+    assert "hashpartitioning(_band" in auc
     assert "BroadcastHashJoin" in auc
     # bloom join: the probe-side filter contains the bit-test BEFORE
     # the equi join (the pre-exchange prune), and the final join is a
@@ -734,3 +734,18 @@ def test_pagerank_is_one_lazy_grouped_pass(spark):
     assert final.count("FlatMapGroupsInPandas") == 1, plan
     assert final.count("Exchange") == 1, plan
     assert "Join" not in final and "Window" not in final, plan
+
+
+def test_win_ntile_builds_without_a_job(spark):
+    """Building q_win_ntile's frame launches no Spark job: its global
+    rank is engine.stats.banded_cum over acctbal bands, a lazy plan
+    with no partitioning to pin by an eager checkpoint."""
+    sc = spark.sparkContext
+    group = "test_plans:q_win_ntile:build"
+    sc.setJobGroup(group, "build only")
+    try:
+        df = all_queries()["q_win_ntile"](spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() == 150

@@ -3,7 +3,7 @@ hypothesis — the reference's intended dev stack per .gitignore:50)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -333,8 +333,8 @@ def test_gini_banded_rank_equals_global_rank(cents):
 @given(n=st.integers(min_value=1, max_value=2000))
 @settings(max_examples=60, deadline=None)
 def test_ntile_closed_form_matches_definition(n):
-    """The RFM rewrite's closed-form quintile (engine/relational.py
-    q_rfm_segments._tile) must reproduce SQL ntile(5) for every n:
+    """engine/stats.py closed_ntile at k = 5, as q_rfm_segments uses
+    it, must reproduce SQL ntile(5) for every n:
     with base = n div 5 and rem = n mod 5, the first rem tiles hold
     base+1 rows, the rest base — pure-python mirror of the Spark
     expression, checked against the bucket boundaries directly."""
@@ -355,6 +355,48 @@ def test_ntile_closed_form_matches_definition(n):
         want.extend([b] * s)
     got = [tile(rn) for rn in range(1, n + 1)]
     assert got == want
+
+
+banded_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=-7, max_value=7)),
+        st.integers(min_value=-50, max_value=50),
+        st.integers(min_value=-50, max_value=50),
+    ),
+    max_size=40,
+)
+
+
+@given(data=banded_rows, descending=st.booleans())
+@example(data=[], descending=False)
+@example(data=[(4, -9, 2)], descending=True)
+@example(data=[(1, 1, 1), (2, 2, 2), (None, 3, 3), (2, 4, 4)], descending=False)
+@example(data=[(None, 5, -1), (0, -2, 0), (None, 1, 7), (0, 3, 3)], descending=True)
+@_settings
+def test_banded_cum_equals_global_window(spark, data, descending):
+    """engine.stats.banded_cum must equal Spark's own global running
+    sums and totals row for row, for any frame: ties on the order key
+    (broken by id), negative values, NULL keys (a NULL band keeps its
+    rows and sorts as Spark sorts NULLs), the empty frame and a single
+    row, in both directions, over two columns and a row number."""
+    from pyspark.sql import Window
+
+    from engine.stats import banded_cum
+
+    df = spark.createDataFrame(
+        [(i, k, v, w) for i, (k, v, w) in enumerate(data)], "id int, k int, v int, w int"
+    )
+    order = [F.desc("k") if descending else F.asc("k"), F.asc("id")]
+    sums = {"rn": F.lit(1), "v": F.col("v"), "w": F.col("w")}
+    out = [*[f"cum_{c}" for c in sums], *[f"tot_{c}" for c in sums]]
+    got = banded_cum(df, F.floor(F.col("k") / 3), order, sums, descending)
+    run = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = df.select(
+        "id",
+        *[F.sum(e).over(run).alias(f"cum_{c}") for c, e in sums.items()],
+        *[F.sum(e).over(Window.partitionBy()).alias(f"tot_{c}") for c, e in sums.items()],
+    )
+    assert sorted(got.select("id", *out).collect()) == sorted(want.collect())
 
 
 # ---- r7 additions: PNG codec, t-digest merge, band losslessness ----

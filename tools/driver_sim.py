@@ -1,14 +1,13 @@
 """Simulate the driver harness: vanilla SparkSession (no engine configs),
 import __spark_entry__, smoke entry(), then differential-check a sample.
 
-The sample = a fixed cross-family anchor set + ROUND_CHANGED (every key
-added or plan-rewritten in the current round — the r4 exit-seal blind
-spot was sampling only the fixed set, which let a driver-red output
-shape ship despite a "242/242" local sweep) + any extra keys passed on
-the command line. Oracle-checked keys also run the complex-output gate
-(driver's canonicalizer crashes on array/map/struct cells).
+The sample = a fixed cross-family anchor set + the keys passed on the
+command line. Pass every key a change adds or plan-rewrites: sampling
+only the fixed set once let a driver-red output shape ship despite a
+"242/242" local sweep. Oracle-checked keys also run the complex-output
+gate (driver's canonicalizer crashes on array/map/struct cells).
 
-Usage: python tools/driver_sim.py [extra_key ...]
+Usage: python tools/driver_sim.py [changed_key ...]
 """
 import importlib.util
 import os
@@ -24,23 +23,6 @@ sys.path.insert(0, ROOT)
 from tools.check import (  # noqa: E402
     assert_scale_knobs_unset, complex_cols, decimal_cols, normalize, rows_equal,
 )
-
-# Keys added or plan-rewritten THIS round — every one must pass the
-# vanilla-session differential before the exit seal. Maintained by the
-# round builder; reset at round start.
-ROUND_CHANGED = [
-    # (reset at r16 start; every key added or plan-rewritten this
-    # round must be listed here and pass the vanilla-session
-    # differential before the exit seal)
-    # r16: the three new operators (line-level Gopher rules, C4
-    # heuristics, CCNet perplexity buckets)
-    "q_text_gopher_lines",
-    "q_text_c4_rules",
-    "q_text_ccnet_buckets",
-    # r16 ADVICE fix: pair-stage extraction (verbatim expressions,
-    # identical plan) for the crafted two-domain block-key test
-    "q_dedup_url_fuzzy",
-]
 
 # ADVICE r8 (low): a grading/sealing session must run the DEFAULT
 # exact paths — fail loudly if any scale-cutover knob leaked into the
@@ -78,7 +60,7 @@ sample = [
     "q_dedup_jaccard", "q_tokenize", "q_bars_ohlcv",
 ]
 rows_only_sample = ["q_udtf", "q_dedup_minhash", "q_stream_tumbling", "q_stream_stateful"]
-for k in ROUND_CHANGED + sys.argv[1:]:
+for k in sys.argv[1:]:
     if k not in qs:
         print(f"{k}: not registered yet — skipping")
         continue
