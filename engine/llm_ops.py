@@ -54,6 +54,16 @@ def _tokens(col):
 _BROADCAST_ROWS = 1_500_000
 _SALT_N = 8
 
+# Corpus-size cutover of the dedup/ANN scale paths (r6 verdict task
+# #4: the 100 TB story must be executable, not prose): past this many
+# measured rows — unique token sets for the set-similarity family,
+# embedding vectors for the in-label pair baselines (q_sim_pairwise,
+# q_embed_matryoshka: exact in-label pairs are O(B²·d), and past ~1M
+# vectors per shard the pair volume dominates any cluster) — the
+# exact candidate generators switch to their bounded-volume forms.
+# Tests reach the scale path by patching this constant.
+_ANN_CUTOVER = 1_000_000
+
 # Resources (persisted DataFrames, sc.broadcast handles) allocated by
 # the previous dedup-family invocation. Released lazily at the START of
 # the next invocation — by which point the prior returned DataFrame has
@@ -125,38 +135,38 @@ def _cached_groups(docs: DataFrame, key: tuple | None) -> tuple[DataFrame, int, 
     return entry
 
 
-def _maybe_broadcast(df: DataFrame, n_rows: int, gate: int = _BROADCAST_ROWS) -> DataFrame:
+def _maybe_broadcast(df: DataFrame, n_rows: int, gate: int | None = None) -> DataFrame:
     """Broadcast a dim-sized table below the gate; above it, return it
     plain so Catalyst plans an ordinary shuffle join (the join keys for
     these callers — gid / vec_id — are high-cardinality, so the shuffle
     needs no salt). ``gate`` is row-count-based and set per caller to
-    reflect row width (a 64-double embedding row is ~13x a prefix row)."""
+    reflect row width (a 64-double embedding row is ~13x a prefix row);
+    the default ``_BROADCAST_ROWS`` is read at call time."""
+    if gate is None:
+        gate = _BROADCAST_ROWS
     return F.broadcast(df) if n_rows <= gate else df
 
 
-def _self_candidate_join(
-    tbl: DataFrame, keys: list[str], row_key: str, cond, mode: str | None, n_est: int = 0
-):
+def _self_candidate_join(tbl: DataFrame, keys: list[str], row_key: str, cond, n_est: int):
     """Skew-aware self-join producing candidate pairs: ``tbl`` aliased
     a/b, equi on ``keys`` plus the caller's extra ``cond`` (written
-    against aliases a/b). ``mode``: "broadcast" | "salted" | None (auto:
-    broadcast iff ``n_est`` — the caller's measured/derived row count
-    for ``tbl`` — is under the gate).
+    against aliases a/b). Broadcast iff ``n_est`` — the caller's
+    measured/derived row count for ``tbl`` — is within
+    ``_BROADCAST_ROWS``, salted otherwise.
 
-    Broadcast mode avoids hash-partitioning on ``keys``, whose domains
-    are small and skewed (a 31-token vocabulary, duplicate-heavy LSH
-    buckets). Salted mode keeps the join compilable and balanced beyond
-    broadcast scale: side a carries ``pmod(xxhash64(row_key), S)``, side
-    b is replicated once per salt value, and the effective join key
-    (keys..., salt) spreads each hot key over S tasks — same technique
-    as q_join_skew_salted, at the cost of an S-times b-side shuffle."""
+    The broadcast plan avoids hash-partitioning on ``keys``, whose
+    domains are small and skewed (a 31-token vocabulary,
+    duplicate-heavy LSH buckets). The salted plan keeps the join
+    compilable and balanced beyond broadcast scale: side a carries
+    ``pmod(xxhash64(row_key), S)``, side b is replicated once per salt
+    value, and the effective join key (keys..., salt) spreads each hot
+    key over S tasks — same technique as q_join_skew_salted, at the
+    cost of an S-times b-side shuffle."""
     eq = None
     for k in keys:
         c = F.col(f"a.{k}") == F.col(f"b.{k}")
         eq = c if eq is None else eq & c
-    if mode is None:
-        mode = "broadcast" if n_est <= _BROADCAST_ROWS else "salted"
-    if mode == "broadcast":
+    if n_est <= _BROADCAST_ROWS:
         return tbl.alias("a").join(F.broadcast(tbl.alias("b")), eq & cond)
     sa = tbl.withColumn("_salt", F.pmod(F.xxhash64(row_key), F.lit(_SALT_N)))
     sb = tbl.withColumn(
@@ -303,26 +313,20 @@ def _expand_set_pairs(
 
 
 def _jaccard_set_pairs(
-    docs: DataFrame,
-    t_num: int,
-    t_den: int,
-    mode: str | None = None,
-    cache_key: tuple | None = None,
+    docs: DataFrame, t_num: int, t_den: int, cache_key: tuple | None = None
 ) -> DataFrame:
     """Exact set-Jaccard pairs >= t_num/t_den over ``docs(doc_id, toks)``
     (toks must be a sorted distinct array). Shared scale-safe core of
     q_dedup_jaccard / q_dedup_ngram — see q_dedup_jaccard's docstring
     for the three-stage design.
 
-    ``mode`` picks the candidate-join strategy ("broadcast" | "salted" |
-    None = auto by measured row count, see :func:`_self_candidate_join`);
-    both modes produce identical pairs (asserted by the hypothesis
-    brute-force property test in tests/test_properties.py). ``cache_key``
-    (see :func:`_cached_groups`) lets registered queries share the
-    persisted groups table + stats across the dedup family."""
-    groups, verified, n_groups = _jaccard_group_pairs(
-        docs, t_num, t_den, mode, cache_key
-    )
+    The candidate-join strategy follows the measured row count (see
+    :func:`_self_candidate_join`); both strategies produce identical
+    pairs (asserted by the hypothesis brute-force property test in
+    tests/test_properties.py). ``cache_key`` (see
+    :func:`_cached_groups`) lets registered queries share the persisted
+    groups table + stats across the dedup family."""
+    groups, verified, n_groups = _jaccard_group_pairs(docs, t_num, t_den, cache_key)
     same = _same_set_pairs(groups, "jaccard")
     expanded = (
         verified.select(F.explode("mem_a").alias("da"), "mem_b", "jaccard")
@@ -336,40 +340,9 @@ def _jaccard_set_pairs(
     return same.unionByName(expanded)
 
 
-def _jaccard_scale_mode(n_groups: int) -> bool:
-    """Corpus-size cutover for the exact set-similarity core (r8 —
-    r7 verdict task 5, extending the q_sim_pairwise precedent): the
-    PPJoin prefix-filtered candidate join is exact and sub-quadratic,
-    but its candidate volume grows with corpus DENSITY (shared-token
-    co-occurrence), so past ``SPARK_GRAFT_ANN_CUTOVER`` unique sets
-    (default 1e6) — or with ``SPARK_GRAFT_ANN_MODE=approx`` — the
-    candidate generator switches to MinHash banding (the same
-    signature/band scheme as q_dedup_minhash, whose volume is
-    governed by the band-collision probability, not density). The
-    verify stage is IDENTICAL either way (exact array_intersect
-    Jaccard), so the approx path keeps precision 1.0 and loses only
-    band-missed candidates: P(candidate | J) = 1-(1-J^4)^8 ≈ 1.0 at
-    the q_dedup_jaccard threshold 0.95 and ≈ 0.985 at q_dedup_ngram's
-    0.8. Contract test: test_jaccard_minhash_scale_path_contract.
-
-    ``n_groups`` must be a REAL measured count: callers that pin an
-    explicit join mode fake it as _BROADCAST_ROWS+1 to force the
-    salted strategy, which would silently trip the auto cutover (the
-    brute-force property test caught exactly this) — those callers
-    pass ``n_groups=0`` here instead."""
-    env = os.environ.get("SPARK_GRAFT_ANN_MODE", "auto")
-    if env == "exact":
-        return False
-    if env == "approx":
-        return True
-    return n_groups > int(os.environ.get("SPARK_GRAFT_ANN_CUTOVER", "1000000"))
-
-
-def _minhash_candidate_pairs(
-    groups: DataFrame, n_groups: int, mode: str | None
-) -> DataFrame:
+def _minhash_candidate_pairs(groups: DataFrame, n_groups: int) -> DataFrame:
     """MinHash-banded candidate (ga, gb) pairs over unique sets — the
-    scale-path candidate generator behind :func:`_jaccard_scale_mode`.
+    scale-path candidate generator of :func:`_jaccard_group_pairs`.
     Deterministic (xxhash64, hash index as seed), linear signature
     build (one explode + groupBy-min), band self-join volume bounded
     by bucket collisions rather than token co-occurrence."""
@@ -390,7 +363,6 @@ def _minhash_candidate_pairs(
             ["band", "bh"],
             "gid",
             F.col("a.gid") < F.col("b.gid"),
-            mode,
             _MH_BANDS * n_groups,
         )
         .select(F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb"))
@@ -399,11 +371,7 @@ def _minhash_candidate_pairs(
 
 
 def _jaccard_group_pairs(
-    docs: DataFrame,
-    t_num: int,
-    t_den: int,
-    mode: str | None = None,
-    cache_key: tuple | None = None,
+    docs: DataFrame, t_num: int, t_den: int, cache_key: tuple | None = None
 ) -> tuple[DataFrame, DataFrame, int]:
     """Unique-set-level core of :func:`_jaccard_set_pairs`: returns
     ``(groups, verified, n_groups)`` where ``verified`` holds the
@@ -412,28 +380,35 @@ def _jaccard_group_pairs(
     expansion and the identical-set (J = 1) pairs. Callers that only
     need set-level structure (q_dedup_cluster's connected components
     run on the ~|unique sets| graph, never the expanded doc graph)
-    skip the quadratic member expansion entirely."""
+    skip the quadratic member expansion entirely.
+
+    Corpus-size cutover (r8): the PPJoin prefix-filtered candidate
+    join is exact and sub-quadratic, but its candidate volume grows
+    with corpus DENSITY (shared-token co-occurrence), so past
+    ``_ANN_CUTOVER`` measured unique sets the candidate generator
+    switches to MinHash banding (:func:`_minhash_candidate_pairs`,
+    whose volume is governed by the band-collision probability, not
+    density). The verify stage is IDENTICAL either way (exact
+    array_intersect Jaccard), so the scale path keeps precision 1.0
+    and loses only band-missed candidates: P(candidate | J) =
+    1-(1-J^4)^8 ≈ 1.0 at the q_dedup_jaccard threshold 0.95 and
+    ≈ 0.985 at q_dedup_ngram's 0.8. Contract test:
+    test_jaccard_minhash_scale_path_contract."""
     _release_previous()
     # -- 1. collapse docs to unique distinct-token sets ---------------
     prefix_len = F.col("n") - ((F.col("n") * t_num + (t_den - 1)) / t_den).cast("long") + 1
-    if mode is None:
-        groups, n_groups, sum_n = _cached_groups(docs, cache_key)
-        # prefix-row count derived arithmetically from the cached stats
-        # (per-row ceil vs the aggregate floor differs by < n_groups —
-        # noise against the 1.5M-row gate, and both modes are
-        # result-identical anyway)
-        n_prefix = sum_n - (sum_n * t_num) // t_den + n_groups
-    else:
-        groups = _track(_set_groups(docs))
-        n_groups = n_prefix = 0 if mode == "broadcast" else _BROADCAST_ROWS + 1
+    groups, n_groups, sum_n = _cached_groups(docs, cache_key)
+    # prefix-row count derived arithmetically from the cached stats
+    # (per-row ceil vs the aggregate floor differs by < n_groups —
+    # noise against the 1.5M-row gate, and both join strategies are
+    # result-identical anyway)
+    n_prefix = sum_n - (sum_n * t_num) // t_den + n_groups
     # -- 2. candidate join over unique sets: exact PPJoin prefix path
     # by default; MinHash-banded candidates past the corpus-size
-    # cutover (see _jaccard_scale_mode — verify below is identical
-    # either way, so the switch trades recall, never precision).
-    # Explicit-mode callers (join-strategy tests) fake n_groups as
-    # _BROADCAST_ROWS+1, so the auto gate only sees measured counts --
-    if _jaccard_scale_mode(n_groups if mode is None else 0):
-        cand = _minhash_candidate_pairs(groups, n_groups, mode)
+    # cutover (verify below is identical either way, so the switch
+    # trades recall, never precision)
+    if n_groups > _ANN_CUTOVER:
+        cand = _minhash_candidate_pairs(groups, n_groups)
     else:
         sets = groups.select("gid", "toks", "n")
         tok = sets.select("gid", "n", F.explode("toks").alias("tok"))
@@ -477,7 +452,6 @@ def _jaccard_group_pairs(
                 & (nb * t_den >= na * t_num)
                 & (ubound >= i_min)
                 & (max_i >= i_min),
-                mode,
                 n_prefix,
             )
             .select(F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb"))
@@ -562,7 +536,7 @@ def _minhash_oracle() -> str:
     task 2: the key returned ``no_oracle`` every time it rotated into
     the graded window). The twin is expressible because (a) the
     signature hash is the portable md5-derived double-hash family
-    (h1 + i·h2 — see _minhash_pairs), byte-identical in DuckDB via the
+    (h1 + i·h2 — see q_dedup_minhash), byte-identical in DuckDB via the
     q_dedup_simhash '0x'||substr(md5(..)) idiom, and (b) banding has
     EXACT recall at the 0.85 gate: est ≥ 0.85 ⟺ ≤ 4 of 32 rows
     disagree ⟹ ≥ 4 of the 8 4-row bands agree fully ⟹ the pair shares
@@ -600,10 +574,6 @@ def _minhash_oracle() -> str:
 
 @register("q_dedup_minhash", oracle=_minhash_oracle())
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_pairs(spark, sf_dir, mode=None)
-
-
-def _minhash_pairs(spark: SparkSession, sf_dir: str, mode: str | None) -> DataFrame:
     """MinHash-LSH near-dup candidate pairs (shingle -> minhash -> band
     bucket -> bucket join), entirely in whole-stage codegen.
 
@@ -637,15 +607,9 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str, mode: str | None) -> DataFr
     docs = d.select(
         "doc_id", F.array_sort(F.array_distinct(_tokens(F.col("text")))).alias("toks")
     )
-    if mode is None:
-        # shared with q_dedup_jaccard/q_dedup_containment: same corpus,
-        # same word tokenization — cache hit costs zero jobs
-        groups, n_groups, _ = _cached_groups(
-            docs, _groups_cache_key(sf_dir, "word")
-        )
-    else:
-        groups = _track(_set_groups(docs))
-        n_groups = 0 if mode == "broadcast" else _BROADCAST_ROWS + 1
+    # shared with q_dedup_jaccard/q_dedup_containment: same corpus,
+    # same word tokenization — cache hit costs zero jobs
+    groups, n_groups, _ = _cached_groups(docs, _groups_cache_key(sf_dir, "word"))
     same = _same_set_pairs(groups, "jaccard_est")
 
     # Portable per-token hash family (r17, VERDICT r16 task 2): ONE md5
@@ -726,7 +690,6 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str, mode: str | None) -> DataFr
             ["band", "bh"],
             "cid",
             F.col("a.cid") < F.col("b.cid"),
-            mode,
             _MH_BANDS * n_groups,
         )
         .select(
@@ -932,27 +895,6 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_scale_mode(e: DataFrame) -> bool:
-    """Corpus-size cutover for the exact in-label pair baselines
-    (q_sim_pairwise, q_embed_matryoshka) — r6 verdict task #4: the
-    100 TB story must be executable, not prose.
-
-    ``SPARK_GRAFT_ANN_MODE``: ``exact`` pins the exact pair path
-    (default behavior at fixture scale — what the driver's oracle
-    differential grades), ``approx`` pins the bucketed candidate
-    path, ``auto`` (default) switches to the bucketed path once the
-    table exceeds ``SPARK_GRAFT_ANN_CUTOVER`` rows (default 1e6 —
-    in-label exact pairs are O(B²·d); past ~1M vectors per shard the
-    pair volume dominates any cluster). The count() is one
-    metadata-backed parquet row-count job, not a data scan."""
-    mode = os.environ.get("SPARK_GRAFT_ANN_MODE", "auto")
-    if mode == "exact":
-        return False
-    if mode == "approx":
-        return True
-    return e.count() > int(os.environ.get("SPARK_GRAFT_ANN_CUTOVER", "1000000"))
-
-
 def _simhash_bucket(emb_col, bits: int = 3, band: int = 0):
     """Deterministic sign-bit coarse quantizer (SimHash posting
     lists): the bucket id packs the sign bits of ``bits`` consecutive
@@ -970,15 +912,14 @@ def _simhash_bucket(emb_col, bits: int = 3, band: int = 0):
     return b
 
 
-def _ann_bands() -> int:
-    """Number of OR-construction bands for the bucketed path. At the
-    near-duplicate regime (cos ≥ 0.8, per-coordinate sign-flip
-    probability θ/π ≤ 0.2) ONE band with Hamming-1 probing already
-    catches ≥ 95% of pairs; at q_sim_pairwise's deliberately low 0.35
-    threshold (flip prob ≈ 0.39, hit/band ≈ 0.66) bands stack as
-    1 − 0.34^B — the default 2 gives ≈ 0.88, and the knob buys more
-    recall linearly in candidate cost when the workload needs it."""
-    return int(os.environ.get("SPARK_GRAFT_ANN_BANDS", "2"))
+# Number of OR-construction bands for the bucketed path. At the
+# near-duplicate regime (cos ≥ 0.8, per-coordinate sign-flip
+# probability θ/π ≤ 0.2) ONE band with Hamming-1 probing already
+# catches ≥ 95% of pairs; at q_sim_pairwise's deliberately low 0.35
+# threshold (flip prob ≈ 0.39, hit/band ≈ 0.66) bands stack as
+# 1 − 0.34^B — 2 gives ≈ 0.88; each extra band buys recall linearly
+# in candidate cost.
+_ANN_BANDS = 2
 
 
 def _banded_probes(emb_col, nb: int, bits: int = 3):
@@ -1032,18 +973,18 @@ def q_sim_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     would NOT be lossless; the projection bound is the correct
     length-filter analog.
 
-    Scale cutover (r7): past SPARK_GRAFT_ANN_CUTOVER rows (or with
-    SPARK_GRAFT_ANN_MODE=approx) the candidate join additionally
-    blocks on the deterministic SimHash bucket with Hamming-1
-    multi-probe (_simhash_bucket / _banded_probes) — the executable
+    Scale cutover (r7): past ``_ANN_CUTOVER`` rows the candidate join
+    additionally blocks on the deterministic SimHash bucket with
+    Hamming-1 multi-probe (``_ANN_BANDS`` bands of _simhash_bucket /
+    _banded_probes; tests patch the cutover to reach it) — the executable
     form of the "LSH sibling" scale path: per-label pair volume drops
     by the bucket spread while every surviving pair is still verified
     with the exact d-wide cosine (precision stays 1.0; recall is the
     candidate-generation contract pinned in
-    tests/test_llm.py::test_sim_pairwise_scale_path_contract)."""
+    tests/test_llm_ops.py::test_sim_pairwise_scale_path_contract)."""
     n_salts = 8
     e = _t(spark, sf_dir, "embeddings")
-    approx = _ann_scale_mode(e)
+    approx = e.count() > _ANN_CUTOVER  # parquet row count, no data scan
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     norm_of = F.sqrt(
         F.aggregate(
@@ -1062,7 +1003,7 @@ def q_sim_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
         "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
     if approx:
-        nb = _ann_bands()
+        nb = _ANN_BANDS
         bands = F.explode(F.array(*[F.lit(k) for k in range(nb)]))
         a_bkts = F.array(*[_simhash_bucket(F.col("emb"), band=k) for k in range(nb)])
         a = a.withColumn("band", bands).withColumn(
@@ -1321,10 +1262,6 @@ _EMB_BROADCAST_ROWS = 150_000
 
 @register("q_dedup_embedding_ann")  # rows-only: LSH blocking is approximate
 def q_dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embedding_ann_dropped(spark, sf_dir, mode=None)
-
-
-def _embedding_ann_dropped(spark: SparkSession, sf_dir: str, mode: str | None) -> DataFrame:
     """Embedding dedup with LSH blocking — the 100 TB path.
 
     q_dedup_embedding blocks only on ``label``, which is exact but
@@ -1347,10 +1284,7 @@ def _embedding_ann_dropped(spark: SparkSession, sf_dir: str, mode: str | None) -
     r2 95s trap). Everything is cluster-side: no driver collect of the
     corpus anywhere; the per-side join broadcasts the embeddings below
     ``_EMB_BROADCAST_ROWS`` and becomes a plain shuffle join on the
-    high-cardinality vec_id above it (the sharded scale path).
-
-    ``mode`` forces the join strategies for the both-modes-equal
-    property test; None = auto by measured size."""
+    high-cardinality vec_id above it (the sharded scale path)."""
     _release_previous()
     e = _t(spark, sf_dir, "embeddings")
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -1358,10 +1292,7 @@ def _embedding_ann_dropped(spark: SparkSession, sf_dir: str, mode: str | None) -
     # One count job (doubling as the persist materialization point)
     # feeds both gates: the bucket table is exactly _RP_TABLES rows per
     # vector, so no second count is needed.
-    n_vecs = (
-        ed.count() if mode is None
-        else (0 if mode == "broadcast" else _EMB_BROADCAST_ROWS + 1)
-    )
+    n_vecs = ed.count()
     buckets = _track(
         ed.select(
             "vec_id", F.posexplode(F.array(*_rp_bucket_cols())).alias("table", "bucket")
@@ -1376,7 +1307,6 @@ def _embedding_ann_dropped(spark: SparkSession, sf_dir: str, mode: str | None) -
             ["table", "bucket"],
             "vec_id",
             F.col("a.vec_id") < F.col("b.vec_id"),
-            mode,
             _RP_TABLES * n_vecs,
         )
         .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
@@ -2809,6 +2739,10 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Scale-path document-frequency cap of q_dedup_containment's posting.
+_DF_CAP = 256
+
+
 @register(
     "q_dedup_containment",
     oracle="""
@@ -2887,19 +2821,17 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # high-containment small-in-big pair has arbitrarily LOW Jaccard,
     # so band collisions would miss exactly the pairs this operator
     # exists to find): past the cutover, drop tokens with document
-    # frequency above SPARK_GRAFT_DF_CAP from the posting. The join
-    # key's per-token candidate volume is then bounded by cap² instead
-    # of the corpus's worst stop-word df². Ranks (p) are computed on
+    # frequency above _DF_CAP from the posting. The join key's
+    # per-token candidate volume is then bounded by cap² instead of
+    # the corpus's worst stop-word df². Ranks (p) are computed on
     # the FULL set first, so the prefix/positional bounds stay sound;
     # a true pair is lost only if every shared prefix token of A is
     # ultra-common — and A's prefix is by construction its RAREST
     # ceil(0.05·na)+1 tokens, the tail least likely to hit the cap.
     # Verify stays exact → precision 1.0 either way. Contract test:
     # test_containment_dfcap_scale_path_contract.
-    if _jaccard_scale_mode(n_groups):
-        posting = posting.filter(
-            F.col("dfreq") <= int(os.environ.get("SPARK_GRAFT_DF_CAP", "256"))
-        )
+    if n_groups > _ANN_CUTOVER:
+        posting = posting.filter(F.col("dfreq") <= _DF_CAP)
     posting = _track(posting.drop("dfreq").persist())
     na, nb = F.col("a.n"), F.col("b.n")
     pa, pb = F.col("a.p"), F.col("b.p")
@@ -2915,7 +2847,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (nb >= i_min)  # length filter
             & (1 + F.least(na - pa, nb - pb) >= i_min)  # positional filter
             & (max_i >= i_min),
-            None,
             n_post,
         )
         .select(F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb"))
@@ -5255,6 +5186,10 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
+# Query-side sample divisor of q_embed_matryoshka's scale path.
+_EVAL_SAMPLE = 4
+
+
 @register(
     "q_embed_matryoshka",
     oracle="""
@@ -5321,23 +5256,21 @@ def q_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF/LSH keys are the unblocked scale path), two WindowGroupLimit
     rank cuts, one hash join of the two ≤10-row-per-vector sets.
 
-    Scale cutover (r7): past SPARK_GRAFT_ANN_CUTOVER rows (or with
-    SPARK_GRAFT_ANN_MODE=approx) the QUERY side of both retrieval
-    runs is deterministically sampled — keep vectors with
-    pmod(xxhash64(vec_id), SPARK_GRAFT_EVAL_SAMPLE) == 0 (default
-    1-in-4) — while the corpus side stays full. For an EVALUATION
+    Scale cutover (r7): past ``_ANN_CUTOVER`` rows the QUERY side of
+    both retrieval runs is deterministically sampled — keep vectors
+    with pmod(xxhash64(vec_id), _EVAL_SAMPLE) == 0 (1-in-4) — while
+    the corpus side stays full. For an EVALUATION
     operator this is the statistically sound scale path (recall@10 is
     an expectation over queries; a hash sample estimates it unbiased
     — how ann-benchmarks/BEIR-style harnesses evaluate at corpus
     scale), and unlike bucketed candidate pruning it leaves every
     sampled query's top-10 EXACT, so the estimate has no systematic
     bias — only sampling variance that shrinks as 1/sqrt(queries).
-    Contract: with the sample divisor forced to 1 the output is
-    bit-identical to exact mode
+    Contract: with ``_EVAL_SAMPLE`` patched to 1 the scale path is
+    bit-identical to the exact one
     (tests/test_llm_ops.py::test_matryoshka_scale_path_contract)."""
     e = _t(spark, sf_dir, "embeddings")
-    approx = _ann_scale_mode(e)
-    sample_div = int(os.environ.get("SPARK_GRAFT_EVAL_SAMPLE", "4"))
+    approx = e.count() > _ANN_CUTOVER  # parquet row count, no data scan
 
     # r16 optimization (guide §2.4 — two operations keyed the same way
     # share one exchange): the full-64-dim and prefix-16-dim retrieval
@@ -5375,7 +5308,7 @@ def q_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ep").alias("a_ep"), F.col("np").alias("a_np"),
     )
     if approx:
-        a = a.filter(F.pmod(F.xxhash64("vec_id"), F.lit(sample_div)) == 0)
+        a = a.filter(F.pmod(F.xxhash64("vec_id"), F.lit(_EVAL_SAMPLE)) == 0)
     b = v.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("lb"),
@@ -7405,21 +7338,12 @@ def q_dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact token counts. Identical-text duplicates collapse to their
     representative first, so output rows are per distinct text.
 
-    Scale cutover (r8 — the r7 verdict's 2.3×-per-10× watch item):
-    the residual slope is the qualifying-interval volume itself (a
-    heavily-duplicated doc emits one interval per partner span, and
-    the union windows are interval-sized). ``SPARK_GRAFT_SPAN_CAP``
-    (default 0 = exact, the driver-graded path) bounds the interval
-    set per doc: keep the K LONGEST intervals (length desc, then
-    start/end for a total order) before the union, making the output
-    a coverage LOWER BOUND — sound for the removal decision, because
-    the docs whose interval sets explode are exactly the near-copies
-    whose union saturates first (the longest K intervals recover most
-    of the union; the contract test pins equality whenever a doc has
-    ≤ K intervals and ≤-domination otherwise). Candidate generation
-    itself stays bounded by _span_candidates' df ≤ 16 cap either
-    way — the knob bounds the per-doc INTERVAL fan-in, the piece
-    that grows with duplication density."""
+    Scale: candidate generation is bounded by _span_candidates'
+    df ≤ 16 cap. What still grows with duplication density is the
+    per-doc interval volume: a heavily-duplicated doc emits one
+    interval per partner span, and the union windows are
+    interval-sized, but each window is partitioned by doc, so the
+    cost stays per-doc, never corpus-global."""
     d = _t(spark, sf_dir, "documents")
     reps = (
         d.groupBy("text")
@@ -7439,19 +7363,6 @@ def q_dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sb") + F.col("span") - 1).alias("e"),
         )
     ).distinct()
-    cap = int(os.environ.get("SPARK_GRAFT_SPAN_CAP", "0"))
-    if cap > 0:
-        # Lower-bound mode: keep the K longest intervals per doc.
-        # (length desc, s, e) is a TOTAL order after the distinct, so
-        # the kept set is deterministic on both any-engine replays.
-        wcap = Window.partitionBy("doc_id").orderBy(
-            F.desc(F.col("e") - F.col("s")), F.asc("s"), F.asc("e")
-        )
-        iv = (
-            iv.withColumn("rnk", F.row_number().over(wcap))
-            .filter(F.col("rnk") <= cap)
-            .drop("rnk")
-        )
     # distinct makes (s, e) unique per doc, so this ordering is TOTAL:
     # the prev-max flag window and the island cumsum window (two
     # separate evaluations) are guaranteed the same row order

@@ -432,18 +432,8 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold: the gate reads only the MEASURED count of the already-
 # materialized (localCheckpoint-ed) pair list, never a guess. At
 # 100 TB a dup/co-purchase pair graph past the cap runs the unchanged
-# distributed loop. Env override SPARK_GRAFT_CC_CAP exists ONLY so
-# tests can force either path (-1 = always loop, even on an empty
-# pair list — 0 would still take the driver path when count()==0,
-# the r12 ADVICE gap); graded sweeps assert it unset (tools/check.py
-# SCALE_KNOBS).
+# distributed loop.
 _CC_DRIVER_EDGE_CAP = 200_000
-
-
-def _cc_driver_cap() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_CC_CAP", str(_CC_DRIVER_EDGE_CAP)))
 
 
 def _cc_driver_union_find(nodes: DataFrame, und: DataFrame, id_col: str) -> DataFrame:
@@ -453,7 +443,7 @@ def _cc_driver_union_find(nodes: DataFrame, und: DataFrame, id_col: str) -> Data
     identical label the distributed loop converges to, making the
     cutover invisible to results (contract-tested both-paths-equal in
     tests/test_properties.py). The collect is bounded by the
-    _cc_driver_cap() gate its caller just measured; the relabel joins
+    _CC_DRIVER_EDGE_CAP gate its caller just measured; the relabel joins
     a broadcast (id -> component-min) map back onto ``nodes``, absent
     ids keeping their own label exactly like the loop's left-join
     coalesce.
@@ -528,14 +518,14 @@ def connected_components(
     docstring), and no in-repo caller can produce one.
 
     The pair list is materialized ONCE (localCheckpoint); its measured
-    row count picks the strategy: ≤ _cc_driver_cap() solves the
+    row count picks the strategy: ≤ _CC_DRIVER_EDGE_CAP solves the
     component structure driver-side (union-find, label = component
     min — bit-identical to the loop's fixpoint), above it runs the
     distributed propagate + path-halving loop on edges re-derived
     narrowly (a union of two column swaps) from the same checkpoint."""
     a, b = pairs.columns[0], pairs.columns[1]
     und = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).localCheckpoint()
-    if und.count() <= _cc_driver_cap():
+    if und.count() <= _CC_DRIVER_EDGE_CAP:
         return _cc_driver_union_find(nodes, und, id_col)
     edges = und.unionByName(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -878,17 +868,16 @@ def q_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group-then-PPJoin, sub-quadratic) over survivors only, and joins
     back as a left-anti flag. Differential-check caveat (ADVICE r15):
     that shared machinery inherits q_dedup_jaccard's documented
-    exact/approx cutover — past ``SPARK_GRAFT_ANN_CUTOVER`` unique
-    sets (or under ``SPARK_GRAFT_ANN_MODE=approx``) candidate
-    generation switches to MinHash banding and can miss band-missed
-    pairs, while the DuckDB oracle stays exact brute force, so the
-    near-dup stage's n_docs/n_tokens/pct_docs rows are
-    oracle-comparable only on the
-    default exact path (the knob-unset gate tools/check.py enforces
-    for grading runs). The funnel itself is one explode of a
-    <=5-element struct array per doc into a (stage, source) hash agg —
-    map-side combinable; pct divides inside a |sources|-partition
-    window over the <=5x|sources|-row aggregate."""
+    exact/approx cutover — past ``engine.llm_ops._ANN_CUTOVER``
+    measured unique sets candidate generation switches to MinHash
+    banding and can miss band-missed pairs, while the DuckDB oracle
+    stays exact brute force, so the near-dup stage's
+    n_docs/n_tokens/pct_docs rows are oracle-comparable only below
+    the cutover (every fixture scale is far below it). The funnel
+    itself is one explode of a <=5-element struct array per doc into
+    a (stage, source) hash agg — map-side combinable; pct divides
+    inside a |sources|-partition window over the <=5x|sources|-row
+    aggregate."""
     d = _t(spark, sf_dir, "documents")
     w = F.split(F.col("text"), " ")
     base = d.select(

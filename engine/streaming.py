@@ -174,9 +174,7 @@ def _read_stream(spark: SparkSession, src: str, files_per_trigger: int = 1) -> D
     return raw.withColumn("ts", F.timestamp_micros(F.col("ts_us"))).drop("ts_us")
 
 
-def _run_to_memory(
-    stream_df: DataFrame, mode: str, partitions: str | None = None
-) -> DataFrame:
+def _run_to_memory(stream_df: DataFrame, mode: str, partitions: str = "2") -> DataFrame:
     """Execute the streaming query to completion into a memory sink.
 
     State-store layout (r8, re-measured r17): the REPLAY pins
@@ -202,8 +200,8 @@ def _run_to_memory(
     global per-batch max event time, and eviction compares each key's
     window against that global watermark — none depend on how keys
     are sharded. A PRODUCTION stream sizes this to key cardinality
-    instead — the pin is a replay-harness decision, parameterised via
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` (a cluster replay sets it to
+    instead — the pin is a replay-harness decision, passed per call
+    as ``partitions`` (a cluster replay would size it to
     ~key-cardinality/target-rows-per-store), not an engine default
     (engine/session.tune leaves batch queries at the executor
     width).
@@ -218,10 +216,9 @@ def _run_to_memory(
     name = f"mem_{uuid.uuid4().hex[:12]}"
     ckpt = f"{ROOT}/.tmp/ckpt/{name}"
     spark = stream_df.sparkSession
-    n_parts = partitions or os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "2")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_ndmb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", n_parts)
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     try:
         # The pin only needs to span .start(): StreamExecution clones

@@ -316,7 +316,6 @@ def q_win_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("di")
         .agg(F.sum("c").cast("long").alias("y"))
-        .persist()
     )
     a = d.select(F.col("di").alias("di1"), F.col("y").alias("y1"))
     b = d.select(F.col("di").alias("di2"), F.col("y").alias("y2"))

@@ -156,20 +156,25 @@ def test_multimodal_binary_roundtrip(spark):
         assert r["head_hex"] == raw[:4].hex()
 
 
-def test_dedup_family_salted_mode_matches_broadcast(spark):
+def test_dedup_family_salted_mode_matches_broadcast(spark, monkeypatch):
     """The size-adaptive candidate-join switch (broadcast below the row
     gate, salted shuffled-hash above it) must be invisible in the
     output: minhash band-join and embedding-ANN verify produce the
-    identical result in both modes. (The jaccard core gets the same
-    guarantee, against brute force, in tests/test_properties.py.)"""
-    from engine.llm_ops import _embedding_ann_dropped, _minhash_pairs
+    identical result on both sides of the gate (the fixture sits below
+    it; gates patched to -1 force the salted/shuffle plans). (The
+    jaccard core gets the same guarantee, against brute force, in
+    tests/test_properties.py.)"""
+    from engine import llm_ops
 
-    m_b = sorted(map(tuple, _minhash_pairs(spark, SF_SMOKE, "broadcast").collect()))
-    m_s = sorted(map(tuple, _minhash_pairs(spark, SF_SMOKE, "salted").collect()))
+    minhash = all_queries()["q_dedup_minhash"]
+    ann = all_queries()["q_dedup_embedding_ann"]
+    m_b = sorted(map(tuple, minhash(spark, SF_SMOKE).collect()))
+    a_b = sorted(r[0] for r in ann(spark, SF_SMOKE).collect())
+    monkeypatch.setattr(llm_ops, "_BROADCAST_ROWS", -1)
+    monkeypatch.setattr(llm_ops, "_EMB_BROADCAST_ROWS", -1)
+    m_s = sorted(map(tuple, minhash(spark, SF_SMOKE).collect()))
+    a_s = sorted(r[0] for r in ann(spark, SF_SMOKE).collect())
     assert m_b == m_s and m_b
-
-    a_b = sorted(r[0] for r in _embedding_ann_dropped(spark, SF_SMOKE, "broadcast").collect())
-    a_s = sorted(r[0] for r in _embedding_ann_dropped(spark, SF_SMOKE, "salted").collect())
     assert a_b == a_s and a_b
 
 
@@ -181,7 +186,7 @@ def test_embedding_ann_has_no_driver_collect():
 
     from engine import llm_ops
 
-    src = inspect.getsource(llm_ops._embedding_ann_dropped)
+    src = inspect.getsource(llm_ops.q_dedup_embedding_ann)
     for banned in ("toPandas", ".collect()", "sparkContext.broadcast"):
         assert banned not in src, f"driver-side {banned} in ANN verify path"
 
@@ -481,7 +486,7 @@ def test_groups_cache_eviction_and_invalidation(spark, tmp_path):
 def test_jaccard_cached_groups_equals_uncached(spark):
     """The groups cache is a pure materialization concern: q_dedup_jaccard
     through the cache (registered path) must emit exactly the pairs the
-    uncached explicit-mode core emits."""
+    uncached core (no cache key) emits."""
     from engine.llm_ops import _jaccard_set_pairs, _tokens
 
     cached = sorted(
@@ -492,12 +497,12 @@ def test_jaccard_cached_groups_equals_uncached(spark):
         "doc_id",
         F.array_sort(F.array_distinct(_tokens(F.col("text")))).alias("toks"),
     )
-    uncached = sorted(map(tuple, _jaccard_set_pairs(docs, 19, 20, mode="broadcast").collect()))
+    uncached = sorted(map(tuple, _jaccard_set_pairs(docs, 19, 20).collect()))
     assert cached == uncached and cached
 
 
 def test_sim_pairwise_scale_path_contract(spark, monkeypatch):
-    """r7 scale-cutover contract: with SPARK_GRAFT_ANN_MODE=approx the
+    """r7 scale-cutover contract: past the patched ``_ANN_CUTOVER`` the
     banded SimHash candidate path must (a) return ONLY pairs the
     exact path returns with identical cosines (precision 1.0 — every
     candidate is verified with the exact d-wide fold), (b) retrieve
@@ -506,10 +511,11 @@ def test_sim_pairwise_scale_path_contract(spark, monkeypatch):
     with the default 2 bands; the fixture's 0.35-0.45 cosine range is
     the HARD regime for sign-LSH — flip prob ~0.39/coordinate — so
     any regression here means the banding broke)."""
+    from engine import llm_ops
+
     q = all_queries()["q_sim_pairwise"]
-    monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "exact")
     exact = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in q(spark, SF_SMOKE).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "approx")
+    monkeypatch.setattr(llm_ops, "_ANN_CUTOVER", -1)
     approx = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in q(spark, SF_SMOKE).collect()}
     assert approx, "approx path returned nothing"
     for pair, c in approx.items():
@@ -523,17 +529,18 @@ def test_matryoshka_scale_path_contract(spark, monkeypatch):
     """r7 scale-cutover contract for q_embed_matryoshka: the scale
     path samples the QUERY side (exact top-10 per sampled query —
     unbiased recall estimate), so with the sample divisor forced to 1
-    the approx output must be BIT-IDENTICAL to exact mode, and with
-    the default divisor every label's row keeps a valid recall and a
-    plausible sampled query count."""
+    the approx output must be BIT-IDENTICAL to the exact path, and
+    with the default divisor every label's row keeps a valid recall
+    and a plausible sampled query count."""
+    from engine import llm_ops
+
     q = all_queries()["q_embed_matryoshka"]
-    monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "exact")
     exact = sorted(map(tuple, q(spark, SF_SMOKE).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "approx")
-    monkeypatch.setenv("SPARK_GRAFT_EVAL_SAMPLE", "1")
+    monkeypatch.setattr(llm_ops, "_ANN_CUTOVER", -1)
+    monkeypatch.setattr(llm_ops, "_EVAL_SAMPLE", 1)
     full_sample = sorted(map(tuple, q(spark, SF_SMOKE).collect()))
     assert full_sample == exact  # divisor 1 == identity
-    monkeypatch.setenv("SPARK_GRAFT_EVAL_SAMPLE", "4")
+    monkeypatch.setattr(llm_ops, "_EVAL_SAMPLE", 4)
     sampled = {r["label"]: r for r in q(spark, SF_SMOKE).collect()}
     n_exact = {r[0]: r[1] for r in exact}
     total = sum(r["n_vectors"] for r in sampled.values())
@@ -546,25 +553,27 @@ def test_matryoshka_scale_path_contract(spark, monkeypatch):
 def test_jaccard_minhash_scale_path_contract(spark, monkeypatch):
     """r8 scale-cutover contract for the exact set-similarity core
     (_jaccard_group_pairs; consumers q_dedup_jaccard / q_dedup_ngram):
-    with SPARK_GRAFT_ANN_MODE=approx the candidate generator switches
+    past the patched ``_ANN_CUTOVER`` the candidate generator switches
     to MinHash banding while the verify stage stays exact, so the
     approx output must be a SUBSET of the exact output with identical
     jaccard values (precision 1.0), at high recall — P(candidate|J) =
     1-(1-J^4)^8 ≈ 1.0 at jaccard's 0.95 threshold and ≈ 0.985 at
     ngram's 0.8 (identical-set pairs bypass the join entirely and are
     never lost)."""
+    from engine import llm_ops
+
     for key, floor in [("q_dedup_jaccard", 0.99), ("q_dedup_ngram", 0.90)]:
         q = all_queries()[key]
-        monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "exact")
         exact = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
             for r in q(spark, SF_SMOKE).collect()
         }
-        monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "approx")
-        approx = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in q(spark, SF_SMOKE).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(llm_ops, "_ANN_CUTOVER", -1)
+            approx = {
+                (r["doc_a"], r["doc_b"]): r["jaccard"]
+                for r in q(spark, SF_SMOKE).collect()
+            }
         assert approx, f"{key}: approx path returned nothing"
         for pair, j in approx.items():
             assert pair in exact and exact[pair] == j, (key, pair)
@@ -582,20 +591,21 @@ def test_containment_dfcap_scale_path_contract(spark, monkeypatch):
     return a subset with identical containment values (precision 1.0 —
     the verify is exact either way) that still includes every
     identical-set pair (those bypass the join)."""
+    from engine import llm_ops
+
     q = all_queries()["q_dedup_containment"]
-    monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "exact")
     exact = {
         (r["doc_a"], r["doc_b"]): r["containment"]
         for r in q(spark, SF_SMOKE).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_ANN_MODE", "approx")
-    monkeypatch.setenv("SPARK_GRAFT_DF_CAP", "1000000")
+    monkeypatch.setattr(llm_ops, "_ANN_CUTOVER", -1)
+    monkeypatch.setattr(llm_ops, "_DF_CAP", 1_000_000)
     big = {
         (r["doc_a"], r["doc_b"]): r["containment"]
         for r in q(spark, SF_SMOKE).collect()
     }
     assert big == exact
-    monkeypatch.setenv("SPARK_GRAFT_DF_CAP", "4")
+    monkeypatch.setattr(llm_ops, "_DF_CAP", 4)
     capped = {
         (r["doc_a"], r["doc_b"]): r["containment"]
         for r in q(spark, SF_SMOKE).collect()
@@ -611,35 +621,6 @@ def test_containment_dfcap_scale_path_contract(spark, monkeypatch):
         if c == 1.0 and exact.get((p[1], p[0])) == 1.0
     }
     assert ones and ones <= set(capped)
-
-
-def test_span_coverage_cap_contract(spark, monkeypatch):
-    """r8 scale-cutover contract for q_dedup_span_coverage: the
-    SPARK_GRAFT_SPAN_CAP knob bounds the per-doc interval set (the
-    piece whose volume grows with duplication density). Contract:
-    (a) a cap larger than any doc's interval count is BIT-IDENTICAL
-    to the exact path, (b) a tiny cap keeps exactly the same doc set
-    (cap >= 1 preserves every doc that had any qualifying span) with
-    covered_tokens a LOWER BOUND of the exact union and n_tokens
-    unchanged — the coverage-lower-bound semantics the docstring
-    promises."""
-    q = all_queries()["q_dedup_span_coverage"]
-    monkeypatch.delenv("SPARK_GRAFT_SPAN_CAP", raising=False)
-    exact = {r["doc_id"]: r for r in q(spark, SF_SMOKE).collect()}
-    assert exact, "fixture produced no covered docs"
-    monkeypatch.setenv("SPARK_GRAFT_SPAN_CAP", "1000000")
-    big = {r["doc_id"]: r for r in q(spark, SF_SMOKE).collect()}
-    assert {k: tuple(v) for k, v in big.items()} == {
-        k: tuple(v) for k, v in exact.items()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_SPAN_CAP", "1")
-    capped = {r["doc_id"]: r for r in q(spark, SF_SMOKE).collect()}
-    assert set(capped) == set(exact)
-    for doc_id, r in capped.items():
-        e = exact[doc_id]
-        assert r["n_tokens"] == e["n_tokens"]
-        assert 0 < r["covered_tokens"] <= e["covered_tokens"]
-        assert r["coverage"] <= e["coverage"] + 1e-9
 
 
 def test_semdedup_keeps_cluster_minimum_and_blocks(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+import pytest
 from pyspark.sql import functions as F
 
 rows = st.lists(
@@ -83,11 +84,12 @@ def test_jaccard_set_pairs_matches_brute_force(spark, docs, t):
     """_jaccard_set_pairs (set-group + PPJoin prefix/length/positional/
     infeasibility filters) must equal the brute-force O(n^2) answer for
     ANY corpus and threshold — the filters may only prune candidates
-    that provably cannot qualify. Run in BOTH candidate-join modes: the
+    that provably cannot qualify. Run on BOTH sides of the candidate-join
+    gate (as measured, then with the broadcast gates patched to -1): the
     broadcast plan and the salted shuffled-hash fallback must emit the
     identical pair set (the size-adaptive switch may never change the
     answer)."""
-    from engine.llm_ops import _jaccard_set_pairs
+    from engine import llm_ops
 
     t_num, t_den = t
     sets = {i: frozenset(toks) for i, toks in enumerate(docs)}
@@ -100,11 +102,15 @@ def test_jaccard_set_pairs_matches_brute_force(spark, docs, t):
             union = len(a | b)
             if inter * t_den >= t_num * union:
                 expected.add((ids[i], ids[j]))
-    for mode in ("broadcast", "salted"):
+    for mode, gate in (("broadcast", None), ("salted", -1)):
         df = spark.createDataFrame(
             [(i, sorted(sets[i])) for i in ids], "doc_id long, toks array<string>"
         )
-        got_rows = _jaccard_set_pairs(df, t_num, t_den, mode=mode).collect()
+        with pytest.MonkeyPatch.context() as m:
+            if gate is not None:
+                m.setattr(llm_ops, "_BROADCAST_ROWS", gate)
+                m.setattr(llm_ops, "_EMB_BROADCAST_ROWS", gate)
+            got_rows = llm_ops._jaccard_set_pairs(df, t_num, t_den).collect()
         got = {(r["doc_a"], r["doc_b"]) for r in got_rows}
         assert got == expected, (mode, sorted(expected - got), sorted(got - expected))
         for r in got_rows:  # emitted jaccard values are the true ratios
@@ -131,15 +137,14 @@ def test_connected_components_matches_union_find(spark, edges):
     """BOTH strategies of the r11 size cutover — the driver-side
     union-find (default at these sizes: every case is under the
     measured-count cap) and the distributed min-label propagation loop
-    (forced via SPARK_GRAFT_CC_CAP=-1 — NOT 0, which would still take
+    (forced by patching _CC_DRIVER_EDGE_CAP to -1 — NOT 0, which would still take
     the driver path on an empty edge list since count 0 <= 0; r12
     ADVICE) — must equal reference union-find components for ANY
     graph, including the adversarial long-chain shapes (propagation
     needs eccentricity rounds there), self-loops/duplicate edges, and
     NULL endpoints (both paths must drop such edges; a NULL-endpoint
     edge is appended to every drawn case)."""
-    import os
-
+    from engine import pipeline
     from engine.pipeline import connected_components
 
     n = 16
@@ -168,14 +173,12 @@ def test_connected_components_matches_union_find(spark, edges):
         for r in connected_components(nodes, pairs, "id").collect()
     }
     assert got_driver == expected
-    os.environ["SPARK_GRAFT_CC_CAP"] = "-1"
-    try:
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(pipeline, "_CC_DRIVER_EDGE_CAP", -1)
         got_loop = {
             r["id"]: r["cluster_id"]
             for r in connected_components(nodes, pairs, "id").collect()
         }
-    finally:
-        del os.environ["SPARK_GRAFT_CC_CAP"]
     assert got_loop == expected
 
 
