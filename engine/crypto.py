@@ -14,11 +14,60 @@ funnels data through a single task and all run in whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.io import load_table as _t
 from engine.registry import register
+
+
+def day_index() -> Column:
+    """The UTC day number of the tick time ``ts`` as long ``di``:
+    ``floor(unix_timestamp(date_trunc('day', ts)) / 86400)``. See
+    ``daily_bars`` for the conventions it belongs to."""
+    return F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400).cast("long").alias("di")
+
+
+def daily_bars(ev: DataFrame, *aggs: str, day: bool = False, **custom: Column) -> DataFrame:
+    """The integer-cent daily bar per exchange (``event_type``) — the one
+    place that holds the cross-engine bar conventions every daily
+    technical-analysis key and its DuckDB oracle share:
+
+    - integer cents: ``c = floor(value * 100)`` cast to long;
+    - UTC day index: ``di = floor(unix_timestamp(date_trunc('day', ts))
+      / 86400)`` (``day_index``);
+    - day label: ``day = date_format(date_trunc('day', ts), 'yyyy-MM-dd')``;
+    - open and close: the tick with the smallest / largest
+      ``(ts, event_id)``, taken as ``min`` / ``max`` of
+      ``struct(ts, event_id, c)`` — ``event_id`` breaks equal timestamps.
+
+    The ticks project ``event_type``, ``di``, ``day`` (only when ``day``),
+    ``c``, ``ts`` and ``event_id`` and group by ``event_type``, ``di``
+    (and ``day``). Each name in ``aggs`` is one of ``hi`` (max cents),
+    ``lo`` (min cents), ``op`` and ``cl``; each ``custom`` name is an
+    aggregate Column over those tick columns (``cents=F.sum("c")``).
+    The result carries the group keys, then ``aggs``, then ``custom``,
+    in the caller's order. One partial+final hash aggregate; columns no
+    aggregate reads are pruned by the optimizer."""
+    tick = F.struct(F.col("ts").alias("t"), F.col("event_id").alias("e"), F.col("c").alias("v"))
+    bar = {"hi": F.max("c"), "lo": F.min("c"), "op": F.min(tick)["v"], "cl": F.max(tick)["v"]}
+    keys = ["event_type", "di", "day"] if day else ["event_type", "di"]
+    label = [F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day")] if day else []
+    return (
+        ev.select(
+            "event_type",
+            day_index(),
+            *label,
+            F.floor(F.col("value") * 100).cast("long").alias("c"),
+            "ts",
+            "event_id",
+        )
+        .groupBy(*keys)
+        .agg(
+            *[bar[a].alias(a) for a in aggs],
+            *[col.alias(name) for name, col in custom.items()],
+        )
+    )
 
 
 @register(
@@ -1996,18 +2045,7 @@ def q_win_rolling_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation would catastrophically cancel in the denominator.
     One exchange (event_type), all five sums share the frame; ticks
     collapse to the |types|×|days| daily table first."""
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-        )
-        .groupBy("event_type", "di")
-        .agg(F.sum("c").cast("long").alias("cents"))
-    )
+    daily = daily_bars(_t(spark, sf_dir, "events"), cents=F.sum("c").cast("long"))
     from pyspark.sql import Window
 
     win = (
@@ -2501,16 +2539,7 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     the day; the 1-row max-day bound stops churn attribution past the
     series end. Identity new+retained+resurrected = DAU holds by
     construction and is pinned in tests."""
-    ev = _t(spark, sf_dir, "events")
-    ud = (
-        ev.select(
-            "user_id",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-        )
-        .distinct()
-    )
+    ud = _t(spark, sf_dir, "events").select("user_id", day_index()).distinct()
     w = Window.partitionBy("user_id").orderBy("di")
     c = ud.select(
         "user_id",
@@ -2794,19 +2823,7 @@ def q_win_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same exchange. One hash agg to |types|×|days| bars, then ALL
     windows (9, 26, and the lag) share ONE (event_type, di)
     exchange+sort; frames are ≤26 rows."""
-    ev = _t(spark, sf_dir, "events")
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(F.max("c").alias("hi"), F.min("c").alias("lo"))
-    )
+    d = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", day=True)
     w9 = Window.partitionBy("event_type").orderBy("di").rowsBetween(-8, 0)
     w26 = Window.partitionBy("event_type").orderBy("di").rowsBetween(-25, 0)
     wl = Window.partitionBy("event_type").orderBy("di")
@@ -2885,23 +2902,12 @@ def q_liquidity_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ticks → |types|×|days| bars in one hash aggregate;
     one lag window on that bounded table; one re-aggregate to |types|
     rows."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("value") > 0)
-    cents = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            cents.alias("c"),
-        )
-        .groupBy("event_type", "di")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.sum("c").cast("long").alias("vol"),
-            F.count("*").cast("long").alias("n_ticks"),
-        )
+    b = daily_bars(
+        _t(spark, sf_dir, "events").filter(F.col("value") > 0),
+        "hi",
+        "lo",
+        vol=F.sum("c").cast("long"),
+        n_ticks=F.count("*").cast("long"),
     )
     wlag = Window.partitionBy("event_type").orderBy("di")
     r = b.select(
@@ -3049,27 +3055,7 @@ def q_win_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     every level is arithmetic on three exact integers divided once
     for display — no accumulation, no quantization needed. Warm-up
     (first day per type) is excluded on both engines."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(F.struct(F.col("ts").alias("t"), F.col("event_id").alias("e"),
-                           F.col("c").alias("v")))["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     w = Window.partitionBy("event_type").orderBy("di")
     p = b.select(
         "event_type",
@@ -3240,31 +3226,7 @@ def q_vol_estimators(spark: SparkSession, sf_dir: str) -> DataFrame:
     takes sqrt ONCE on the per-type mean — a negative Garman-Klass
     mean (possible by construction) is NULL on both engines."""
     ev = _t(spark, sf_dir, "events").filter(F.col("value") >= 0.01)
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.min(
-                F.struct(F.col("ts").alias("t"), F.col("event_id").alias("e"),
-                         F.col("c").alias("v"))
-            )["v"].alias("op"),
-            F.max(
-                F.struct(F.col("ts").alias("t"), F.col("event_id").alias("e"),
-                         F.col("c").alias("v"))
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(ev, "hi", "lo", "op", "cl")
     grid = lambda col: F.floor(F.log(F.col(col).cast("double")) * 1000000).cast(  # noqa: E731
         "long"
     )
@@ -3796,9 +3758,7 @@ def q_win_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         ev.select(
             "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
+            day_index(),
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
             c.alias("c"),
             F.regexp_extract("props", r'"k":\s*([0-9]+)', 1)
@@ -3912,12 +3872,7 @@ def q_win_pairs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     daily = (
         _t(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type").alias("et"),
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-        )
+        .groupBy(F.col("event_type").alias("et"), day_index())
         .agg(F.sum(F.floor(F.col("value") * 100)).cast("long").alias("cents"))
         .select(
             "et",
@@ -4005,32 +3960,7 @@ def q_win_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     max/min of exact cents on the SAME per-type sort, and the
     breakout flag is an integer comparison — no float ever enters
     the signal path."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     w = Window.partitionBy("event_type").orderBy("di").rowsBetween(-20, -1)
     d = b.select(
         "event_type",
@@ -4098,32 +4028,7 @@ def q_win_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplies cl·30 against tp3_sum ± 3·rng_sum so the SIGNAL
     never touches a float. Both window frames ride one per-type
     sort."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     w = Window.partitionBy("event_type").orderBy("di").rowsBetween(-9, 0)
     k = b.select(
         "event_type",
@@ -4197,32 +4102,7 @@ def q_win_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical on both engines). Daily bars collapse in one hash agg;
     the 14-row frame runs on the per-type day sort — flat scaling,
     same as the channel trio."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     w = Window.partitionBy("event_type").orderBy("di").rowsBetween(-13, 0)
     d = b.select(
         "event_type",
@@ -4296,20 +4176,7 @@ def q_win_aroon(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare breaks price ties toward the NEWER bar, identically in
     both engines), and the aroon values are 10·(10−Δrows). No float
     exists anywhere in this operator."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(F.max("c").alias("hi"), F.min("c").alias("lo"))
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", day=True)
     wr = Window.partitionBy("event_type").orderBy("di")
     r = b.select(
         "event_type",
@@ -4398,32 +4265,7 @@ def q_win_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, and the ±100 signal cross-multiplies 28·D vs 3·M so the
     decision never touches a float. Typical price stays on the ×3
     cent grid (q_win_mfi precedent: /3 never happens)."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     t = b.select(
         "event_type", "di", "day", (F.col("hi") + F.col("lo") + F.col("cl")).alias("tp3")
     )
@@ -4532,32 +4374,7 @@ def q_win_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     far inside BIGINT), and ADX is one division of the exact DX-grid
     sum. DI± are single IEEE divisions of exact integers. Two stacked
     7-row frames on the same per-type sort — one window exchange."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     s0 = Window.partitionBy("event_type").orderBy("di")
     lagged = b.select(
         "event_type",
@@ -4678,32 +4495,7 @@ def q_win_vortex(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, identical in both engines. Daily bars collapse in one
     hash agg first — the window runs over |types|×|days| rows, never
     ticks, so the shape is flat at any corpus scale."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     s0 = Window.partitionBy("event_type").orderBy("di")
     l = b.select(
         "event_type",
@@ -4801,30 +4593,7 @@ def q_win_cmo(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMO itself is ONE IEEE division of exact integers. The count(chg)
     frame-warm-up drops the first 14 bars identically on both
     engines."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl")
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "cl", day=True)
     s0 = Window.partitionBy("event_type").orderBy("di")
     l = b.select(
         "event_type",
@@ -4903,30 +4672,7 @@ def q_win_dpo(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type day sort (one window exchange carries the lag AND the
     frame), the phase sign compares the two integers directly, and
     the dollar-scale display value is ONE IEEE division."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl")
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "cl", day=True)
     s0 = Window.partitionBy("event_type").orderBy("di")
     w = Window.partitionBy("event_type").orderBy("di").rowsBetween(-19, 0)
     s = b.select(
@@ -5019,32 +4765,7 @@ def q_win_ultimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dollar-volume passes ~$10⁵) — so UO is ONE division of two
     exactly-computed integers and the 70/30 zone flag compares
     num against 70·den / 30·den without ever touching a float."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     s0 = Window.partitionBy("event_type").orderBy("di")
     l = b.select(
         "event_type", "di", "day", "hi", "lo", "cl",
@@ -5160,9 +4881,7 @@ def q_win_force_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         ev.select(
             "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
+            day_index(),
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
             c.alias("c"),
             "ts",
@@ -5291,29 +5010,7 @@ def q_backtest_sma(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB (years × thousands of symbols) the same plan holds —
     the window input is the calendar-bounded bar table, never
     ticks."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl")
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "cl")
     w5 = Window.partitionBy("event_type").orderBy("di").rowsBetween(-4, 0)
     w20 = Window.partitionBy("event_type").orderBy("di").rowsBetween(-19, 0)
     s = b.select(
@@ -5464,28 +5161,7 @@ def q_regime_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     stationary probability is ONE division after clearing both
     denominators (c01(c10+c11) / (c01(c10+c11) + c10(c00+c01)) — no
     ratio-of-ratios)."""
-    b = (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl")
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "cl")
     ws = Window.partitionBy("event_type").orderBy("di")
     r = b.select(
         "event_type",
@@ -5603,29 +5279,7 @@ def q_win_efficiency_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplies 2·|net| > Σ|Δ| (ER > 0.5) so no float decides
     it; ER is ONE IEEE division. The 10-bar displaced close and the
     rolling sum ride one per-type window exchange."""
-    ev = _t(spark, sf_dir, "events")
-    b = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl")
-        )
-    )
+    b = daily_bars(_t(spark, sf_dir, "events"), "cl", day=True)
     w = Window.partitionBy("event_type").orderBy("di")
     l = b.select(
         "event_type",
@@ -5707,32 +5361,7 @@ def q_win_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines evaluate the IDENTICAL (2x + 12·acc)/14 expression
     seeded with the first close, so the doubles (and the sign flags
     read off them) agree bit-for-bit."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    d = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     s = d.groupBy("event_type").agg(
         F.sort_array(
             F.collect_list(F.struct(F.col("di"), F.col("cl").cast("double").alias("v")))
@@ -5840,30 +5469,7 @@ def q_win_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last, in the SAME pinned order — bit-identical doubles, so
     the candle color flag agrees too. Per-type day counts bound the
     arrays; one hash agg + one fold, no window."""
-    ev = _t(spark, sf_dir, "events")
-    c = F.floor(F.col("value") * 100).cast("long")
-    st = F.struct(
-        F.col("ts").alias("t"), F.col("event_id").alias("e"), F.col("c").alias("v")
-    )
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            c.alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.min(st)["v"].alias("op"),
-            F.max(st)["v"].alias("cl"),
-        )
-    )
+    d = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "op", "cl", day=True)
     s = d.groupBy("event_type").agg(
         F.sort_array(
             F.collect_list(
@@ -5990,28 +5596,7 @@ def q_win_kama(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold the identical expression over the identical list, so the
     doubles match bit-for-bit. Day counts per type bound the
     arrays."""
-    ev = _t(spark, sf_dir, "events")
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl")
-        )
-    )
+    d = daily_bars(_t(spark, sf_dir, "events"), "cl")
     pw = Window.partitionBy("event_type").orderBy("di")
     v10 = pw.rowsBetween(-9, 0)
     back = pw.rowsBetween(-10, 0)
@@ -6214,31 +5799,7 @@ def q_win_choppiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag compares the exact ratio against the CONSTANT 14^0.618
     (evaluated identically on both engines) rather than the rounded
     display value."""
-    ev = _t(spark, sf_dir, "events")
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max("c").alias("hi"),
-            F.min("c").alias("lo"),
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl"),
-        )
-    )
+    d = daily_bars(_t(spark, sf_dir, "events"), "hi", "lo", "cl", day=True)
     pw = Window.partitionBy("event_type").orderBy("di")
     tr = d.select(
         "event_type",
@@ -6332,29 +5893,7 @@ def q_win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (10⁴·(peak−close)/peak), their squares accumulate as 128-bit in
     the rolling window, and the RMS is one sqrt of an exact-integer
     mean. Two stacked 14-row windows share the per-type exchange."""
-    ev = _t(spark, sf_dir, "events")
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-            "ts",
-            "event_id",
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("ts").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("c").alias("v"),
-                )
-            )["v"].alias("cl")
-        )
-    )
+    d = daily_bars(_t(spark, sf_dir, "events"), "cl", day=True)
     pw = Window.partitionBy("event_type").orderBy("di")
     v = pw.rowsBetween(-13, 0)
     w = d.select(

@@ -27,7 +27,11 @@ Contract details (driver protocol, __spark_entry__.py docstring):
   beyond linear cents) must aggregate in decimal(38,0) / HUGEINT and
   cast to double only for final ratios (q_stats_anova's per-group
   cents² terms hit 6.3e18 at sf0.1 — caught by the r10 full-registry
-  sf0.1 snapshot; linear cents sums have ≥1e5× headroom).
+  sf0.1 snapshot; linear cents sums have ≥1e5× headroom);
+- daily bars over ticks (integer cents, UTC day index, ``yyyy-MM-dd``
+  label, (ts, event_id) open/close) come from
+  ``engine.crypto.daily_bars`` / ``day_index``, whose docstring holds
+  those conventions.
 """
 
 from __future__ import annotations

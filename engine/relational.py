@@ -2774,14 +2774,14 @@ def q_agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the earliest day identically everywhere (struct comparison is
     the portable argmax). Two hash aggregates (ticks → daily → peak),
     both map-side combined; no window, no join."""
+    from engine.crypto import day_index
+
     ev = _t(spark, sf_dir, "events")
     daily = (
         ev.select(
             "event_type",
             F.to_date(F.date_trunc("day", "ts")).alias("day"),
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
+            day_index(),
             F.floor(F.col("value") * 100).cast("long").alias("c"),
         )
         .groupBy("event_type", "day", "di")
@@ -3074,18 +3074,9 @@ def q_quality_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames, no joins."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
+    from engine.crypto import daily_bars
+
+    d = daily_bars(_t(spark, sf_dir, "events"), day=True, n=F.count("*").cast("long"))
     t = Window.partitionBy("event_type").orderBy("di").rowsBetween(-7, -1)
     lagw = Window.partitionBy("event_type").orderBy("di")
     w = d.select(

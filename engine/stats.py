@@ -419,19 +419,9 @@ def q_stats_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     divide back to dollars² only in the final rounded column."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    d = (
-        ev.select(
-            "event_type",
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            F.floor(F.col("value") * 100).cast("long").alias("c"),
-        )
-        .groupBy("event_type", "di", "day")
-        .agg(F.sum("c").cast("long").alias("y"))
-    )
+    from engine.crypto import daily_bars
+
+    d = daily_bars(load_table(spark, sf_dir, "events"), day=True, y=F.sum("c").cast("long"))
     win = (
         Window.partitionBy("event_type")
         .orderBy("di")
@@ -1762,14 +1752,11 @@ def q_stats_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     sees more rows than days in the fixture's range."""
     from pyspark.sql import Window
 
-    cents = F.floor(F.col("value") * 100).cast("long")
+    from engine.crypto import day_index
+
     d = (
         load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di")
-        )
+        .groupBy(day_index())
         .agg(
             F.expr(
                 "CAST(sum(CASE WHEN event_type = 'purchase' "
@@ -1985,13 +1972,13 @@ def q_anomaly_esd(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over exact moments."""
     from pyspark.sql import Window
 
+    from engine.crypto import day_index
+
     daily = (
         load_table(spark, sf_dir, "events")
         .groupBy(
             F.col("event_type").alias("et"),
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
+            day_index(),
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
         )
         .agg(F.sum(F.floor(F.col("value") * 100)).cast("long").alias("c"))
@@ -2131,14 +2118,11 @@ def q_stats_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type frame — trivially bounded."""
     from pyspark.sql import Window
 
+    from engine.crypto import day_index
+
     daily = (
         load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type").alias("et"),
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-        )
+        .groupBy(F.col("event_type").alias("et"), day_index())
         .agg(F.sum(F.floor(F.col("value") * 100)).cast("long").alias("cents"))
     )
     wl = Window.partitionBy("et").orderBy("di")
@@ -2274,14 +2258,11 @@ def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     type from three exact integers."""
     from pyspark.sql import Window
 
+    from engine.crypto import day_index
+
     daily = (
         load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type").alias("et"),
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-        )
+        .groupBy(F.col("event_type").alias("et"), day_index())
         .agg(F.sum(F.floor(F.col("value") * 100)).cast("long").alias("cents"))
     )
     w = Window.partitionBy("et").orderBy("di")
@@ -2434,14 +2415,11 @@ def q_forecast_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     once."""
     from pyspark.sql import Window
 
+    from engine.crypto import day_index
+
     daily = (
         load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.col("event_type").alias("et"),
-            F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400)
-            .cast("long")
-            .alias("di"),
-        )
+        .groupBy(F.col("event_type").alias("et"), day_index())
         .agg(F.sum(F.floor(F.col("value") * 100)).cast("long").alias("c"))
     )
     w = Window.partitionBy("et").orderBy("di")

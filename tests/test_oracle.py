@@ -1,56 +1,22 @@
 """Differential tests: every oracle-bearing query vs DuckDB at sf0.001
 (fast smoke of the same protocol the driver runs at sf0.01; the full
-sf0.01 sweep is tools/check.py). SURVEY.md §5.2 primary strategy."""
+sf0.01 sweep is tools/check.py, whose ``normalize``/``rows_equal``
+comparator this test shares). SURVEY.md §5.2 primary strategy."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
 from engine.registry import all_oracles, all_queries
 
 from tests.conftest import SF_SMOKE
+from tools.check import normalize, rows_equal
 
 # streaming keys are slow (many micro-batches) — covered by
 # tests/test_streaming.py and tools/check.py, skipped in the fast sweep.
 _SLOW = {k for k in all_queries() if k.startswith("q_stream")}
 
 KEYS = sorted(k for k in all_queries() if k not in _SLOW)
-
-
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, float) and math.isnan(v):
-        return None
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    import numpy as np
-
-    if isinstance(v, np.ndarray):
-        return tuple(_norm(x) for x in v.tolist())
-    if isinstance(v, np.generic):
-        return _norm(v.item())
-    return v
-
-
-def _rows(df):
-    out = df.reindex(sorted(df.columns), axis=1)
-    rows = [tuple(_norm(x) for x in r) for r in out.itertuples(index=False, name=None)]
-    return sorted(rows, key=lambda r: tuple((x is None, str(x)) for x in r))
-
-
-def _eq(a, b):
-    if type(a) is tuple and type(b) is tuple:
-        return len(a) == len(b) and all(_eq(x, y) for x, y in zip(a, b))
-    if isinstance(a, float) or isinstance(b, float):
-        if a is None or b is None:
-            return False
-        return math.isclose(float(a), float(b), rel_tol=1e-9, abs_tol=1e-9)
-    if a is None or b is None:
-        return a is None and b is None
-    return str(a) == str(b)
 
 
 @pytest.mark.parametrize("key", KEYS)
@@ -64,6 +30,6 @@ def test_query_matches_oracle(key, spark, duck):
     odf = duck.execute(sql).fetchdf()
     assert len(sdf) == len(odf), f"rowcount {len(sdf)} != {len(odf)}"
     assert sorted(sdf.columns) == sorted(odf.columns)
-    sr, orr = _rows(sdf), _rows(odf)
-    bad = [(i, a, b) for i, (a, b) in enumerate(zip(sr, orr)) if not _eq(a, b)]
+    sr, orr = (list(normalize(d).itertuples(index=False, name=None)) for d in (sdf, odf))
+    bad = [(i, a, b) for i, (a, b) in enumerate(zip(sr, orr)) if not rows_equal(a, b)]
     assert not bad, f"{len(bad)} rows differ; first: {bad[0]}"
