@@ -28,6 +28,14 @@ def day_index() -> Column:
     return F.floor(F.unix_timestamp(F.date_trunc("day", "ts")) / 86400).cast("long").alias("di")
 
 
+def props_volume() -> Column:
+    """The integer trade volume of a tick as long: the digits after
+    ``"k":`` in its JSON ``props`` string
+    (``regexp_extract(props, '"k":\\s*([0-9]+)', 1)`` cast to long).
+    The oracles parse the same ``"k":`` convention with the same regex."""
+    return F.regexp_extract("props", r'"k":\s*([0-9]+)', 1).cast("long")
+
+
 def daily_bars(ev: DataFrame, *aggs: str, day: bool = False, **custom: Column) -> DataFrame:
     """The integer-cent daily bar per exchange (``event_type``) — the one
     place that holds the cross-engine bar conventions every daily
@@ -827,7 +835,7 @@ def q_win_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    vol = F.regexp_extract("props", r'"k":\s*([0-9]+)', 1).cast("long")
+    vol = props_volume()
     prev = F.lag("value").over(w)
     flow = (
         F.when(prev.isNull(), 0)
@@ -3320,7 +3328,7 @@ def q_win_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.regexp_extract("props", r'"k":\s*([0-9]+)', 1).cast("long").alias("vol"),
+        props_volume().alias("vol"),
         (c100 - F.lag(c100).over(w)).alias("d"),
     )
     s = t.select(
@@ -3761,9 +3769,7 @@ def q_win_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
             day_index(),
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
             c.alias("c"),
-            F.regexp_extract("props", r'"k":\s*([0-9]+)', 1)
-            .cast("long")
-            .alias("k"),
+            props_volume().alias("k"),
             "ts",
             "event_id",
         )
@@ -4886,9 +4892,7 @@ def q_win_force_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             c.alias("c"),
             "ts",
             "event_id",
-            F.regexp_extract("props", r'"k":\s*([0-9]+)', 1)
-            .cast("long")
-            .alias("k"),
+            props_volume().alias("k"),
         )
         .groupBy("event_type", "di", "day")
         .agg(

@@ -157,20 +157,16 @@ def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array family incl. higher-order transform/filter/aggregate over
     the 64-dim embedding vectors (SURVEY §2.8 q_fn_array)."""
+    from engine.llm_ops import vec
+
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return e.select(
         "vec_id",
         F.size("embedding").alias("dim"),
         F.element_at("embedding", 2).cast("double").alias("e2"),
-        F.round(F.aggregate(as_double, F.lit(0.0), lambda a, x: a + x), 4).alias("vec_sum"),
+        F.round(F.aggregate(vec("embedding"), F.lit(0.0), lambda a, x: a + x), 4).alias("vec_sum"),
         F.round(
-            F.aggregate(
-                F.transform(F.slice("embedding", 1, 8), lambda x: x.cast("double")),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
-            4,
+            F.aggregate(vec(F.slice("embedding", 1, 8)), F.lit(0.0), lambda a, x: a + x), 4
         ).alias("head_sum"),
         F.round(F.element_at(F.array_sort("embedding"), 1).cast("double"), 6).alias("vec_min"),
         F.size(F.filter("embedding", lambda x: x > 0)).alias("n_pos"),
@@ -625,18 +621,14 @@ def q_fn_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles (float32 → double on both engines), so the rounded dot is
     cross-engine-stable; exists/forall compare identical doubles; the
     sequence fold is pure integer arithmetic."""
+    from engine.llm_ops import vdot, vec
+
     e = _t(spark, sf_dir, "embeddings")
-    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    d = e.select("vec_id", emb.alias("emb"), F.size("embedding").alias("dim"))
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), F.reverse(F.col("emb")), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d = e.select("vec_id", vec("embedding").alias("emb"), F.size("embedding").alias("dim"))
     return d.select(
         "vec_id",
         "dim",
-        (F.round(dot, 4) + 0.0).alias("dot_rev"),
+        (F.round(vdot("emb", F.reverse("emb")), 4) + 0.0).alias("dot_rev"),
         F.exists("emb", lambda x: x > 0.3).alias("any_big"),
         F.forall("emb", lambda x: F.abs(x) < 1.0).alias("all_small"),
         F.aggregate(

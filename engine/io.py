@@ -240,12 +240,6 @@ def read_jdbc(spark: SparkSession, url: str, table: str, **kwargs):
     return spark.read.format("jdbc").options(**jdbc_options(url, table, **kwargs))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views (SQL entry point)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """CSV ingestion: header, PERMISSIVE mode, corrupt-record capture."""
     full = schema.add("_corrupt_record", StringType())

@@ -26,7 +26,7 @@ import os
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.io import load_table as _t
@@ -39,6 +39,60 @@ FP_MOD = 1_000_000_007
 
 def _tokens(col):
     return F.split(col, " ")
+
+
+# ---------------------------------------------------------------------------
+# Vector folds: the embedding arithmetic every similarity key shares
+# ---------------------------------------------------------------------------
+# Every double fold is Spark's ``aggregate`` from the zero ``F.lit(0.0)``
+# with merge ``acc + x``, strictly left to right. ``array_sum`` or an SQL
+# ``sum`` would change both the plan and the summation order.
+# ``zip_with`` pads a shorter array with NULL, so ragged arrays, like an
+# array holding a NULL, fold to NULL. Driver-side only: no function
+# shipped to Python workers may name these.
+
+
+def vec(col: Column | str) -> Column:
+    """The float32 array ``col`` widened element-wise to double
+    (``transform(col, x -> cast(x as double))``), so every later fold
+    runs in double: float32 ``0.1`` becomes ``0.10000000149011612``."""
+    return F.transform(col, lambda x: x.cast("double"))
+
+
+def vdot(a: Column | str, b: Column | str) -> Column:
+    """The dot product of the double arrays ``a`` and ``b``:
+    ``aggregate(zip_with(a, b, (x, y) -> x * y), 0.0, (acc, x) -> acc + x)``,
+    summed left to right from ``0.0``. An empty pair is ``0.0``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def vnorm(a: Column | str) -> Column:
+    """The Euclidean norm of the double array ``a``: ``sqrt`` of the
+    ``vdot`` fold over ``x * x`` (``transform`` squares, then the same
+    left-to-right sum from ``0.0``)."""
+    return F.sqrt(
+        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
+    )
+
+
+def vcos(a: Column | str, b: Column | str) -> Column:
+    """The unrounded cosine ``vdot(a, b) / (vnorm(a) * vnorm(b))``, built
+    in that order. Keys that keep per-vector norms divide ``vdot`` by
+    their norm columns instead."""
+    return vdot(a, b) / (vnorm(a) * vnorm(b))
+
+
+def qdist(a: Column | str, b: Column | str) -> Column:
+    """The exact squared L2 distance of two quantized (long) arrays:
+    ``aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0L, (acc, x)
+    -> acc + x)``, the integer fold the Lloyd assignments compare."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -815,25 +869,14 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixtures are finite by construction (TESTDATA.md; the differential
     would flag any regression), so the prune is lossless here."""
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    norm_of = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("emb"), lambda x: x * x), F.lit(0.0), lambda a_, x: a_ + x
-        )
-    )
     e2 = (
-        e.select("vec_id", "label", as_double.alias("emb"))
-        .withColumn("nrm", norm_of)
+        e.select("vec_id", "label", vec("embedding").alias("emb"))
+        .withColumn("nrm", vnorm("emb"))
         .withColumn("u1", F.element_at("emb", 1) / F.col("nrm"))
     )
     a = e2.alias("a")
     b = e2.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.emb"), F.col("b.emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a.nrm") * F.col("b.nrm"))
+    cos = vdot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .filter(F.abs(F.col("a.u1") - F.col("b.u1")) <= F.lit(1.140176))
@@ -874,18 +917,9 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the embedding table — the exact-search baseline that
     q_sim_topk_lsh approximates sub-linearly."""
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", as_double.alias("emb"))
+    ed = e.select("vec_id", vec("embedding").alias("emb"))
     q = ed.filter(F.col("vec_id") == 0).select(F.col("emb").alias("qe"))
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), F.col("qe"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    self_norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(F.col(c), lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    cosine = F.round(dot / (self_norm("emb") * self_norm("qe")), 6)
+    cosine = F.round(vcos("emb", "qe"), 6)
     return (
         ed.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -985,15 +1019,9 @@ def q_sim_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_salts = 8
     e = _t(spark, sf_dir, "embeddings")
     approx = e.count() > _ANN_CUTOVER  # parquet row count, no data scan
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    norm_of = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("emb"), lambda x: x * x), F.lit(0.0), lambda a_, x: a_ + x
-        )
-    )
     e2 = (
-        e.select("vec_id", "label", as_double.alias("emb"))
-        .withColumn("nrm", norm_of)
+        e.select("vec_id", "label", vec("embedding").alias("emb"))
+        .withColumn("nrm", vnorm("emb"))
         .withColumn("u1", F.element_at("emb", 1) / F.col("nrm"))
     )
     a = e2.withColumn(
@@ -1019,12 +1047,7 @@ def q_sim_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
             "*", F.col("pr.band").alias("band"), F.col("pr.bkt").alias("bkt")
         ).drop("pr")
     a, b = a.alias("a"), b.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.emb"), F.col("b.emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a.nrm") * F.col("b.nrm"))
+    cos = vdot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
     cond = (F.col("a.label") == F.col("b.label")) & (
         F.col("a.salt") == F.col("b.salt")
     )
@@ -1165,8 +1188,7 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k, nprobe = 16, 6
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", as_double.alias("emb"))
+    ed = e.select("vec_id", vec("embedding").alias("emb"))
     feat = ed.withColumn("features", array_to_vector(F.col("emb")))
     model = KMeans(k=k, seed=7, maxIter=10).fit(feat)
     assigned = model.transform(feat).select("vec_id", "emb", F.col("prediction").alias("list_id"))
@@ -1176,13 +1198,7 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = sorted(range(k), key=lambda i: d2[i])[:nprobe]
 
     qcol = F.array(*[F.lit(float(x)) for x in qv])
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), qcol, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    cosine = F.round(dot / (norm(F.col("emb")) * norm(qcol)), 6)
+    cosine = F.round(vcos("emb", qcol), 6)
     return (
         assigned.filter(F.col("list_id").isin([int(p) for p in probe]))
         .filter(F.col("vec_id") != 0)
@@ -1245,12 +1261,7 @@ def _rp_bucket_cols():
     cols = []
     for t in range(_RP_TABLES):
         r = F.array(*[F.lit(float(x)) for x in projs[t]])
-        proj = F.aggregate(
-            F.zip_with(F.col("emb"), r, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        cols.append(F.floor(proj / _RP_BUCKET).cast("long"))
+        cols.append(F.floor(vdot("emb", r) / _RP_BUCKET).cast("long"))
     return cols
 
 
@@ -1287,8 +1298,7 @@ def q_dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-cardinality vec_id above it (the sharded scale path)."""
     _release_previous()
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = _track(e.select("vec_id", as_double.alias("emb")).persist())
+    ed = _track(e.select("vec_id", vec("embedding").alias("emb")).persist())
     # One count job (doubling as the persist materialization point)
     # feeds both gates: the bucket table is exactly _RP_TABLES rows per
     # vector, so no second count is needed.
@@ -1317,21 +1327,13 @@ def q_dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by orders of magnitude, so recomputing both norms per PAIR (the
     # O(|cand|*d) trap fixed in q_embed_knn) would triple the verify
     # arithmetic.
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
     ea = ed.select(
-        F.col("vec_id").alias("va"), F.col("emb").alias("emb_a"),
-        norm(F.col("emb")).alias("norm_a"),
+        F.col("vec_id").alias("va"), F.col("emb").alias("emb_a"), vnorm("emb").alias("norm_a")
     )
     eb = ed.select(
-        F.col("vec_id").alias("vb"), F.col("emb").alias("emb_b"),
-        norm(F.col("emb")).alias("norm_b"),
+        F.col("vec_id").alias("vb"), F.col("emb").alias("emb_b"), vnorm("emb").alias("norm_b")
     )
-    dot = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    cos = dot / (F.col("norm_a") * F.col("norm_b"))
+    cos = vdot("emb_a", "emb_b") / (F.col("norm_a") * F.col("norm_b"))
     return (
         cand.join(_maybe_broadcast(ea, n_vecs, _EMB_BROADCAST_ROWS), "va")
         .join(_maybe_broadcast(eb, n_vecs, _EMB_BROADCAST_ROWS), "vb")
@@ -3070,20 +3072,9 @@ def q_sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", as_double.alias("emb"))
+    ed = e.select("vec_id", vec("embedding").alias("emb"))
     q = ed.filter(F.col("vec_id") == 0).select(F.col("emb").alias("qe"))
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), F.col("qe"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    self_norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(F.col(c), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    cosine = F.round(dot / (self_norm("emb") * self_norm("qe")), 6)
+    cosine = F.round(vcos("emb", "qe"), 6)
     vtop = (
         ed.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -3147,8 +3138,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 8
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", as_double.alias("emb"))
+    ed = e.select("vec_id", vec("embedding").alias("emb"))
 
     # -- per-partition (n, Σx, Σxxᵀ) partials: map-only, no shuffle ---
     def _moment_partials(batches):
@@ -3198,12 +3188,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj_cols = []
     for ci, c in enumerate(comps):
         c_lit = F.array(*[F.lit(float(x)) for x in c])
-        dot = F.aggregate(
-            F.zip_with(centered, c_lit, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        proj_cols.append(F.round(dot, 6).alias(f"pc{ci}"))
+        proj_cols.append(F.round(vdot(centered, c_lit), 6).alias(f"pc{ci}"))
     return ed.select("vec_id", *proj_cols)
 
 
@@ -4411,18 +4396,9 @@ def q_sim_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generators (q_sim_topk_lsh / q_sim_topk_ivf prune, this
     verifies)."""
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", "label", as_double.alias("emb"))
+    ed = e.select("vec_id", "label", vec("embedding").alias("emb"))
     q = ed.filter(F.col("vec_id") == 0).select(F.col("emb").alias("qe"))
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), F.col("qe"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    self_norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(F.col(c), lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    cos = dot / (self_norm("emb") * self_norm("qe"))
+    cos = vcos("emb", "qe")
     return (
         ed.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -5290,13 +5266,8 @@ def q_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three SFs; interleaved A/B in OPTIMIZATION_r16.md.
     def width_cols(dims: int | None, tag: str):
         emb = F.col("embedding") if dims is None else F.slice("embedding", 1, dims)
-        arr = F.transform(emb, lambda x: x.cast("double"))
-        norm = F.sqrt(
-            F.aggregate(
-                F.transform(arr, lambda x: x * x), F.lit(0.0), lambda a_, x: a_ + x
-            )
-        )
-        return arr.alias(f"e{tag}"), norm.alias(f"n{tag}")
+        arr = vec(emb)
+        return arr.alias(f"e{tag}"), vnorm(arr).alias(f"n{tag}")
 
     ef, nf = width_cols(None, "f")
     ep, np_ = width_cols(16, "p")
@@ -5317,12 +5288,7 @@ def q_embed_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def cosine(side_a, side_b, na, nb):
-        dot = F.aggregate(
-            F.zip_with(side_a, side_b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a_, x: a_ + x,
-        )
-        return F.round(dot / (na * nb), 4) + 0.0
+        return F.round(vdot(side_a, side_b) / (na * nb), 4) + 0.0
 
     pairs = a.join(
         b, (F.col("label") == F.col("lb")) & (F.col("vec_id") != F.col("neighbor_id"))
@@ -6873,18 +6839,9 @@ def q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_stats.py re-derives the full selection from raw
     embeddings with numpy and demands exact rank-for-rank equality."""
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", as_double.alias("emb"))
+    ed = e.select("vec_id", vec("embedding").alias("emb"))
     q = ed.filter(F.col("vec_id") == 0).select(F.col("emb").alias("qe"))
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), F.col("qe"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    self_norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(F.col(c), lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    cosine = F.round(dot / (self_norm("emb") * self_norm("qe")), 6)
+    cosine = F.round(vcos("emb", "qe"), 6)
     cand = (
         ed.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -6895,21 +6852,8 @@ def q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = cand.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea"))
     b = cand.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb"))
-    pair_dot = F.aggregate(
-        F.zip_with(F.col("ea"), F.col("eb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pnorm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(F.col(c), lambda x: x * x), F.lit(0.0), lambda a_, x: a_ + x)
-    )
-    pairs = (
-        a.join(b, F.col("va") < F.col("vb"))
-        .select(
-            "va",
-            "vb",
-            F.round(pair_dot / (pnorm("ea") * pnorm("eb")), 6).alias("sim"),
-        )
+    pairs = a.join(b, F.col("va") < F.col("vb")).select(
+        "va", "vb", F.round(vcos("ea", "eb"), 6).alias("sim")
     )
     # bounded driver post-pass: k=20 relevance rows + k(k-1)/2 pair sims
     rel = {r["vec_id"]: r["rel"] for r in cand.select("vec_id", "rel").collect()}
@@ -6963,8 +6907,7 @@ def q_embed_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 16
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", as_double.alias("emb"))
+    ed = e.select("vec_id", vec("embedding").alias("emb"))
     feat = ed.withColumn("features", array_to_vector(F.col("emb")))
     model = KMeans(k=k, seed=7, maxIter=10).fit(feat)
     qv = ed.filter(F.col("vec_id") == 0).head()["emb"]
@@ -6974,21 +6917,14 @@ def q_embed_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     order = sorted(range(k), key=lambda i: d2[i])
     qcol = F.array(*[F.lit(float(x)) for x in qv])
-    dot = F.aggregate(
-        F.zip_with(F.col("emb"), qcol, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
+    cosine = F.round(vcos("emb", qcol), 6)
     scored = (
         model.transform(feat)
         .filter(F.col("vec_id") != 0)
         .select(
             "vec_id",
             F.col("prediction").alias("list_id"),
-            F.round(dot / (norm(F.col("emb")) * norm(qcol)), 6).alias("cosine"),
+            cosine.alias("cosine"),
         )
         .localCheckpoint(eager=True)
     )
@@ -7051,8 +6987,7 @@ def q_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     M, K, D = 4, 16, 64
     sub = D // M
     e = _t(spark, sf_dir, "embeddings")
-    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    ed = e.select("vec_id", as_double.alias("emb")).localCheckpoint(eager=True)
+    ed = e.select("vec_id", vec("embedding").alias("emb")).localCheckpoint(eager=True)
     qv = ed.filter(F.col("vec_id") == 0).head()["emb"]
 
     # r16 optimization (guide §2.6 + §1.2 "per-task work"): the 4
@@ -7703,13 +7638,6 @@ def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
     )
 
-    def dist(qcol, ccol):
-        return F.aggregate(
-            F.zip_with(qcol, ccol, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     def assign(cents_df):
         j = pts.crossJoin(F.broadcast(cents_df))
         return (
@@ -7717,7 +7645,7 @@ def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id",
                 "q",
                 F.struct(
-                    dist(F.col("q"), F.col("c")).alias("d"),
+                    qdist("q", "c").alias("d"),
                     F.col("cid").alias("cid"),
                 ).alias("cand"),
             )
@@ -7948,13 +7876,6 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy("hk", "vec_id")).alias("cid"), "c"
     )
 
-    def dist(qcol, ccol):
-        return F.aggregate(
-            F.zip_with(qcol, ccol, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     def assign(cents_df):
         j = pts.crossJoin(F.broadcast(cents_df))
         return (
@@ -7962,7 +7883,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id",
                 "q",
                 F.struct(
-                    dist(F.col("q"), F.col("c")).alias("d"),
+                    qdist("q", "c").alias("d"),
                     F.col("cid").alias("cid"),
                 ).alias("cand"),
             )

@@ -31,7 +31,10 @@ Contract details (driver protocol, __spark_entry__.py docstring):
 - daily bars over ticks (integer cents, UTC day index, ``yyyy-MM-dd``
   label, (ts, event_id) open/close) come from
   ``engine.crypto.daily_bars`` / ``day_index``, whose docstring holds
-  those conventions.
+  those conventions;
+- embedding arithmetic (the float -> double cast and the left-to-right
+  double dot / norm folds from ``0.0``) comes from ``engine.llm_ops``
+  ``vec`` / ``vdot`` / ``vnorm`` / ``vcos``, whose docstrings hold it.
 """
 
 from __future__ import annotations

@@ -1,11 +1,15 @@
 """The integer-cent daily bar is written once: ``engine.crypto.daily_bars``
 (and its ``day_index``) holds the cents, day-index, day-label and
-open/close conventions for every daily technical-analysis key.
+open/close conventions for every daily technical-analysis key, and
+``props_volume`` the integer trade volume parsed from ``props``. The
+embedding arithmetic is written once too: ``engine.llm_ops`` ``vec``
+(float -> double cast), ``vdot`` / ``vnorm`` (left-to-right double folds)
+and ``qdist`` (the long squared distance).
 
-A static guard keeps the day-index expression and the (ts, event_id, c)
-tick struct out of every other engine function, except the sites listed
-in ``STRUCT_KEPT`` with the reason each stays hand-written; a unit test
-pins the helper against a plain-Python replay of hand-built ticks."""
+A static guard keeps each of those expressions out of every other engine
+function, except the sites listed in ``ALLOWED`` with the reason each
+stays hand-written; a unit test pins ``daily_bars`` against a plain-Python
+replay of hand-built ticks (``tests/test_vector_folds.py`` pins the folds)."""
 
 from __future__ import annotations
 
@@ -21,16 +25,46 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField, Str
 import engine
 from engine.crypto import daily_bars
 
-DAY_INDEX = "F.unix_timestamp(F.date_trunc('day', 'ts')) / 86400"
-TICK_STRUCT = "F.struct('ts'.alias('t'), 'event_id'.alias('e'), 'c'.alias('v'))"
+# Canonical source (see ``_canon``) of each convention. Array arguments
+# (``.+``), lambda parameter names (``\w+``) and the fold's zero are
+# wildcards, so a renamed or re-typed copy still matches.
+_ZERO = r"F\.lit\(0(?:\.0)?\)(?:\.cast\('\w+'\))?"
+_SUM = _ZERO + r", lambda (?P<acc>\w+), (?P<el>\w+): (?P=acc) \+ (?P=el)\)"
+_PAIR = r"F\.aggregate\(F\.zip_with\(.+, lambda (?P<x>\w+), (?P<y>\w+): "
+PATTERNS = {
+    "day_index": re.escape("F.unix_timestamp(F.date_trunc('day', 'ts')) / 86400"),
+    "tick_struct": re.escape(
+        "F.struct('ts'.alias('t'), 'event_id'.alias('e'), 'c'.alias('v'))"
+    ),
+    "props_volume": re.escape(
+        r"""F.regexp_extract('props', '"k":\\s*([0-9]+)', 1).cast('long')"""
+    ),
+    "double_cast": r"F\.transform\(.+, lambda (?P<x>\w+): (?P=x)\.cast\('double'\)\)",
+    "dot_fold": _PAIR + r"(?P=x) \* (?P=y)\), " + _SUM,
+    "sq_dist_fold": _PAIR + r"\((?P=x) - (?P=y)\) \* \((?P=x) - (?P=y)\)\), " + _SUM,
+    "norm_fold": r"F\.aggregate\(F\.transform\(.+, lambda (?P<x>\w+): "
+    r"(?P=x)(?P<c>\.cast\('double'\))? \* (?P=x)(?P=c)?\), " + _SUM,
+}
 
-DAY_INDEX_OWNERS = {("crypto.py", "day_index")}
-# (module file, function) -> why the tick struct is written there by hand.
-STRUCT_KEPT = {
-    ("crypto.py", "daily_bars"): "the helper itself",
-    ("crypto.py", "q_win_mfi"): "projects the props volume k between c and ts, "
-    "and sums hi + lo + close inside one aggregate (tp3)",
-    ("crypto.py", "q_win_force_index"): "projects the props volume k after event_id",
+# (pattern, module file, function) -> why the expression is written there.
+ALLOWED = {
+    ("day_index", "crypto.py", "day_index"): "the helper itself",
+    ("tick_struct", "crypto.py", "daily_bars"): "the helper itself",
+    ("tick_struct", "crypto.py", "q_win_mfi"): "projects the props volume k between c and "
+    "ts, and sums hi + lo + close inside one aggregate (tp3)",
+    ("tick_struct", "crypto.py", "q_win_force_index"): "projects the props volume k after "
+    "event_id",
+    ("props_volume", "crypto.py", "props_volume"): "the helper itself",
+    ("double_cast", "llm_ops.py", "vec"): "the helper itself",
+    ("dot_fold", "llm_ops.py", "vdot"): "the helper itself",
+    ("norm_fold", "llm_ops.py", "vnorm"): "the helper itself",
+    ("sq_dist_fold", "llm_ops.py", "qdist"): "the helper itself",
+    ("dot_fold", "llm_ops.py", "q_dedup_semdedup"): "an exact long dot of the quantized "
+    "vectors from a long zero, compared with an integer threshold, not the double fold",
+    ("norm_fold", "llm_ops.py", "q_multimodal_struct"): "squares x.cast('double') inside "
+    "its one transform of the struct field; vnorm(vec(...)) adds a second transform",
+    ("sq_dist_fold", "llm_ops.py", "q_embed_pq"): "the only double squared L2 (to a literal "
+    "query); qdist is the long fold of the Lloyd assignments",
 }
 
 
@@ -41,8 +75,8 @@ def _canon(node: ast.AST) -> str:
 
 
 def _copies(tree: ast.AST):
-    """Yield (pattern, enclosing function, line) for every day-index
-    expression and every tick struct in ``tree``."""
+    """Yield (pattern, enclosing function, line) for every expression in
+    ``tree`` that matches one of ``PATTERNS``."""
     owner = {}
     for fn in ast.walk(tree):
         if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -51,26 +85,52 @@ def _copies(tree: ast.AST):
     for n in ast.walk(tree):
         if isinstance(n, (ast.BinOp, ast.Call)):
             text = _canon(n)
-            for name, pattern in (("day_index", DAY_INDEX), ("tick_struct", TICK_STRUCT)):
-                if text == pattern:
+            for name, pattern in PATTERNS.items():
+                if re.fullmatch(pattern, text):
                     yield name, owner.get(n), n.lineno
 
 
-def test_bar_conventions_live_in_one_helper():
-    probe = ast.parse(
-        "def f():\n"
-        "    return (F.unix_timestamp(F.date_trunc(\n        'day', F.col('ts'))) / 86400,\n"
-        '            F.max(F.struct(F.col("ts").alias("t"), "event_id".alias("e"),\n'
-        '                           F.col("c").alias("v"))))\n'
-    )
-    assert sorted(_copies(probe)) == [("day_index", "f", 2), ("tick_struct", "f", 4)]
-    found = []
+PROBE = r"""
+def bars():
+    return (F.unix_timestamp(F.date_trunc(
+        'day', F.col('ts'))) / 86400,
+            F.max(F.struct(F.col("ts").alias("t"), "event_id".alias("e"),
+                           F.col("c").alias("v"))),
+            F.regexp_extract(F.col("props"), r'"k":\s*([0-9]+)', 1).cast("long"))
+def folds(u, w):
+    return (F.transform(F.col("embedding"), lambda t: t.cast("double")),
+            F.aggregate(F.zip_with(u, F.reverse(w), lambda p, q: p * q),
+                        F.lit(0.0), lambda s, v: s + v),
+            F.sqrt(F.aggregate(F.transform("emb", lambda t: t * t),
+                               F.lit(0.0), lambda s, v: s + v)),
+            F.aggregate(F.zip_with(u, w, lambda p, q: (p - q) * (p - q)),
+                        F.lit(0).cast("long"), lambda s, v: s + v),
+            F.aggregate(F.zip_with(u, w, lambda p, q: p + q), F.lit(0.0),
+                        lambda s, v: s + v))
+"""
+
+
+def test_shared_conventions_live_in_one_helper():
+    assert sorted(_copies(ast.parse(PROBE))) == [
+        ("day_index", "bars", 3),
+        ("dot_fold", "folds", 10),
+        ("double_cast", "folds", 9),
+        ("norm_fold", "folds", 12),
+        ("props_volume", "bars", 7),
+        ("sq_dist_fold", "folds", 14),
+        ("tick_struct", "bars", 5),
+    ]
+    found, seen = [], set()
     for path in sorted(Path(engine.__file__).parent.glob("*.py")):
         for name, fn, line in _copies(ast.parse(path.read_text())):
-            allowed = DAY_INDEX_OWNERS if name == "day_index" else STRUCT_KEPT
-            if (path.name, fn) not in allowed:
+            seen.add((name, path.name, fn))
+            if (name, path.name, fn) not in ALLOWED:
                 found.append(f"{path.name}:{line} {fn} {name}")
-    assert not found, f"hand-written bar conventions, use daily_bars/day_index: {found}"
+    assert not found, (
+        "hand-written shared conventions, use daily_bars/day_index/props_volume "
+        f"or vec/vdot/vnorm/vcos/qdist: {found}"
+    )
+    assert sorted(set(ALLOWED) - seen) == [], "allow-listed sites without a copy"
 
 
 def _utc(*ymdhms: int) -> int:
