@@ -69,9 +69,9 @@ def vdot(a: Column | str, b: Column | str) -> Column:
 
 
 def vnorm(a: Column | str) -> Column:
-    """The Euclidean norm of the double array ``a``: ``sqrt`` of the
-    ``vdot`` fold over ``x * x`` (``transform`` squares, then the same
-    left-to-right sum from ``0.0``)."""
+    """The Euclidean norm of the double array ``a``:
+    ``sqrt(aggregate(transform(a, x -> x * x), 0.0, (acc, x) -> acc + x))``,
+    the squares summed left to right from ``0.0`` as in ``vdot``."""
     return F.sqrt(
         F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
     )

@@ -13,8 +13,8 @@ hand-built frame: the behaviour any replacement kernel must reproduce.
 from __future__ import annotations
 
 import math
+from itertools import zip_longest
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType, LongType, StructField, StructType
 
 from engine.llm_ops import qdist, vcos, vdot, vec, vnorm
@@ -40,9 +40,7 @@ def _fold(terms):
 
 
 def _py_dot(a, b):
-    n = max(len(a), len(b))
-    pad = lambda v: list(v) + [None] * (n - len(v))  # noqa: E731
-    return _fold(None if x is None or y is None else x * y for x, y in zip(pad(a), pad(b)))
+    return _fold(None if x is None or y is None else x * y for x, y in zip_longest(a, b))
 
 
 def _py_norm(a):
