@@ -240,14 +240,19 @@ def read_jdbc(spark: SparkSession, url: str, table: str, **kwargs):
     return spark.read.format("jdbc").options(**jdbc_options(url, table, **kwargs))
 
 
+def _with_corrupt_record(schema: StructType) -> StructType:
+    """A new schema: the caller's fields plus the ``_corrupt_record``
+    capture column (``StructType.add`` would append it in place)."""
+    return StructType([*schema.fields, StructField("_corrupt_record", StringType())])
+
+
 def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """CSV ingestion: header, PERMISSIVE mode, corrupt-record capture."""
-    full = schema.add("_corrupt_record", StringType())
     return (
         spark.read.option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(full)
+        .schema(_with_corrupt_record(schema))
         .csv(path)
     )
 
@@ -256,7 +261,7 @@ def read_json(spark: SparkSession, path: str, schema: StructType | None = None) 
     """JSON-lines ingestion; explicit schema preferred, inference allowed."""
     reader = spark.read.option("mode", "PERMISSIVE")
     if schema is not None:
-        reader = reader.schema(schema.add("_corrupt_record", StringType()))
+        reader = reader.schema(_with_corrupt_record(schema))
     return reader.json(path)
 
 

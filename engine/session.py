@@ -31,7 +31,9 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # local[32] box: 32 is 1x cores; AQE coalesces small stages further.
+    # Measured, not derived: with AQE coalescing, 32, 4 (one per core)
+    # and parallelismFirst=false with a 64m advisory size tied on a
+    # 4-core host at sf0.1 (SCALING.md, Round 23).
     "spark.sql.shuffle.partitions": "32",
     # Runtime bloom-filter semi-join reduction: on a selective build
     # side, the probe-side scan filters rows BEFORE the shuffle — at

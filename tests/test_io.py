@@ -59,6 +59,23 @@ def test_json_ingestion(spark):
     assert df.filter(F.col("_corrupt_record").isNotNull()).count() == 1
 
 
+def test_readers_leave_the_callers_schema_alone(spark):
+    """One schema object serves repeated reads: the readers add
+    ``_corrupt_record`` to a copy, never to the caller's StructType."""
+    csv_path, json_path = f"{TMP}/reuse.csv", f"{TMP}/reuse.jsonl"
+    with open(csv_path, "w") as f:
+        f.write("id,sym,px\n1,ZIL,0.021\n")
+    with open(json_path, "w") as f:
+        f.write('{"id": 1, "sym": "ZIL", "px": 0.021}\n')
+    schema = _schema()
+    for read, path in ((read_csv, csv_path), (read_json, json_path)):
+        for _ in range(2):
+            df = read(spark, path, schema)
+            assert df.columns == ["id", "sym", "px", "_corrupt_record"]
+            assert df.count() == 1
+    assert schema == _schema()
+
+
 def test_partitioned_sink_prunes_on_read(spark):
     li = load_table(spark, SF_SMOKE, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate")

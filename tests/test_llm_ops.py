@@ -991,3 +991,29 @@ def test_ccnet_buckets_small_language_and_letterless_doc(spark, tmp_path):
     assert xx == {"head", "middle"}, xx  # no tail for a 2-doc language
     en = [got[d]["bucket"] for d in (0, 1, 2, 3)]
     assert sorted(en).count("head") == 2  # ntile: first bucket gets the extra
+
+
+def test_embed_pq_build_jobs_carry_the_callers_group(spark):
+    """q_embed_pq fits its codebooks on pool threads; every job its
+    build launches, those threads' included, must carry the caller's
+    job group. Job ids are sequential, so the status store's newest id
+    before and after the build bounds the jobs it launched."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def newest_job() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    group = "test_llm_ops:q_embed_pq:build"
+    first = newest_job() + 1
+    sc.setJobGroup(group, "build only")
+    try:
+        all_queries()["q_embed_pq"](spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    launched = set(range(first, newest_job() + 1))
+    assert launched, "the build launched no job"
+    assert set(sc.statusTracker().getJobIdsForGroup(group)) == launched

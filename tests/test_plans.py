@@ -9,20 +9,16 @@ windows anywhere in the registry."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
-
-import pytest
 
 from engine.registry import all_queries
 from tests.conftest import SF_SMOKE
 
-# Streaming queries execute a full micro-batch replay when built, so
-# explaining them here would re-run every stream; their semantics are
-# covered by the oracle sweep and tests/test_streaming.py. Everything
-# else is explained without execution.
-_SKIP_PREFIX = "q_stream_"
+# The plan text comes from the session fixture `builds`
+# (tests/conftest.py): every key but the streaming ones (`STREAM_PREFIX`,
+# which replay their micro-batches when built) is built once and
+# explained without execution, and the output-type guards in
+# tests/test_registry.py read the same builds.
 
 # Queries allowed to contain a single-partition exchange/window —
 # key -> the documented bounded-fold/spine justification
@@ -323,35 +319,21 @@ _CROSS_OK: dict[str, str] = {
 }
 
 
-
-@pytest.fixture(scope="module")
-def plans(spark):
-    out: dict[str, str] = {}
-    for key, fn in all_queries().items():
-        if key.startswith(_SKIP_PREFIX):
-            continue
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            fn(spark, SF_SMOKE).explain("formatted")
-        out[key] = buf.getvalue()
-    return out
-
-
-def test_no_cartesian_products(plans):
+def test_no_cartesian_products(builds):
     bad = [
         k
-        for k, p in plans.items()
+        for k, b in builds.items()
         if k not in _CROSS_OK
-        and ("CartesianProduct" in p or "BroadcastNestedLoopJoin" in p)
+        and ("CartesianProduct" in b.plan or "BroadcastNestedLoopJoin" in b.plan)
     ]
     assert not bad, f"unplanned cartesian/nested-loop joins in: {bad}"
 
 
-def test_single_partition_stages_are_documented(plans):
+def test_single_partition_stages_are_documented(builds):
     bad = [
         k
-        for k, p in plans.items()
-        if "SinglePartition" in p and k not in _SINGLE_PARTITION_OK
+        for k, b in builds.items()
+        if "SinglePartition" in b.plan and k not in _SINGLE_PARTITION_OK
     ]
     assert not bad, f"undocumented single-partition stages in: {bad}"
 
@@ -374,35 +356,35 @@ def test_plan_whitelists_are_annotated():
             assert k in registered, f"{name} has stale entry {k}"
 
 
-def test_filter_reaches_parquet_scan(plans):
-    p = plans["q_filter"]
+def test_filter_reaches_parquet_scan(builds):
+    p = builds["q_filter"].plan
     assert "PushedFilters:" in p
     pushed = [l for l in p.splitlines() if "PushedFilters:" in l]
     assert any("[]" not in l for l in pushed), "q_filter pushed no predicates"
 
 
-def test_column_pruning_in_projection(plans):
+def test_column_pruning_in_projection(builds):
     # q_project needs 4 of lineitem's 11 columns; the scan must not
     # read the others
-    scan = [l for l in plans["q_project"].splitlines() if "ReadSchema" in l]
+    scan = [l for l in builds["q_project"].plan.splitlines() if "ReadSchema" in l]
     assert scan, "no parquet scan found"
     for unused in ("l_tax", "l_quantity", "l_shipdate", "l_returnflag"):
         assert unused not in scan[0], f"q_project scan reads unused {unused}"
 
 
-def test_join_strategies(plans):
-    assert "BroadcastHashJoin" in plans["q_join_broadcast"]
+def test_join_strategies(builds):
+    assert "BroadcastHashJoin" in builds["q_join_broadcast"].plan
     # q_join_sortmerge leaves strategy to AQE: at smoke scale the tables
     # are under the broadcast threshold so BHJ is the right pick (SMJ
     # appears at sf0.1) — what must never appear is a nested loop.
     assert (
-        "SortMergeJoin" in plans["q_join_sortmerge"]
-        or "BroadcastHashJoin" in plans["q_join_sortmerge"]
+        "SortMergeJoin" in builds["q_join_sortmerge"].plan
+        or "BroadcastHashJoin" in builds["q_join_sortmerge"].plan
     )
     # the as-of join is the union + last_value carry-forward plan: one
     # hash Exchange on user_id, one window, and NO join — the pair-
     # exploding equi-join emulation must not reappear
-    asof = plans["q_join_asof"]
+    asof = builds["q_join_asof"].plan
     assert "Join" not in asof, "as-of join regressed to a pair-exploding join"
     # formatted explain lists each node once in the tree ("Exchange (4)")
     # and once in the detail section ("(4) Exchange") — count tree nodes
@@ -410,11 +392,11 @@ def test_join_strategies(plans):
     assert "hashpartitioning(user_id" in asof
     # the salted skew join must stay in the shuffled-hash regime (a
     # broadcast would make the salt meaningless)
-    assert "ShuffledHashJoin" in plans["q_join_skew_salted"]
+    assert "ShuffledHashJoin" in builds["q_join_skew_salted"].plan
 
 
-def test_topk_uses_take_ordered(plans):
-    assert "TakeOrderedAndProject" in plans["q_topk"]
+def test_topk_uses_take_ordered(builds):
+    assert "TakeOrderedAndProject" in builds["q_topk"].plan
 
 
 def test_salting_flattens_skewed_shuffle(spark):
@@ -449,13 +431,13 @@ def test_salting_flattens_skewed_shuffle(spark):
     assert salted <= plain * 2.2 / n_salts, f"salt did not flatten the skew: {salted} vs {plain}"
 
 
-def test_map_only_ops_have_no_exchange(plans):
+def test_map_only_ops_have_no_exchange(builds):
     # content-addressed split and stratified sample are pure map stages
     for k in ("q_split_hash", "q_sample_stratified"):
-        assert "Exchange" not in plans[k], f"{k} shuffles but should be map-only"
+        assert "Exchange" not in builds[k].plan, f"{k} shuffles but should be map-only"
 
 
-def test_r3_operator_plan_shapes(plans):
+def test_r3_operator_plan_shapes(builds):
     """Pin the scale-critical physical properties of the r3 operators:
     single-Exchange windows, map-only chunking, one-pass rollup, and
     decorrelated lateral."""
@@ -463,21 +445,21 @@ def test_r3_operator_plan_shapes(plans):
     # shuffle (on user_id) — window, filter and downstream agg all share
     # the partitioning (the PIT join must never appear as a range join)
     for k in ["q_twap", "q_drawdown", "q_scd2", "q_join_point_in_time"]:
-        body = plans[k].split("== Physical Plan ==")[-1].split("===== Subqueries")[0]
+        body = builds[k].plan.split("== Physical Plan ==")[-1].split("===== Subqueries")[0]
         tree = body.split("(1) ")[0]
         assert tree.count("Exchange") == 1, (k, tree)
     # q_doc_chunk: map-only — zero shuffles
-    tree = plans["q_doc_chunk"].split("(1) ")[0]
+    tree = builds["q_doc_chunk"].plan.split("(1) ")[0]
     assert "Exchange" not in tree, tree
     # q_rollup_time: one Expand feeding one aggregation pass
-    assert "Expand" in plans["q_rollup_time"]
+    assert "Expand" in builds["q_rollup_time"].plan
     # q_join_lateral: decorrelated — rank-pushdown window, no nested loop
-    p = plans["q_join_lateral"]
+    p = builds["q_join_lateral"].plan
     assert "WindowGroupLimit" in p
     assert "NestedLoop" not in p and "Cartesian" not in p
 
 
-def test_ewma_macd_segmented_fold(plans):
+def test_ewma_macd_segmented_fold(builds):
     """EWMA/MACD must stay on the segmented-scan plan: the tick
     collect_list is keyed by (user_id, day-segment), never by user_id
     alone — a single-level plan would materialize a hot key's entire
@@ -485,7 +467,7 @@ def test_ewma_macd_segmented_fold(plans):
     exactly two Exchanges, the first on (user_id, seg), the second on
     user_id only, with the segment bucket (date_trunc) in the plan."""
     for k in ("q_win_ewma", "q_win_macd", "q_win_cusum"):
-        p = plans[k]
+        p = builds[k].plan
         body = p.split("== Physical Plan ==")[-1].split("===== Subqueries")[0]
         tree = body.split("(1) ")[0]
         assert tree.count("Exchange") == 2, (k, tree)
@@ -498,17 +480,17 @@ def test_ewma_macd_segmented_fold(plans):
         assert two_col and one_col, (k, parts)
 
 
-def test_r4_operator_plan_shapes(plans):
+def test_r4_operator_plan_shapes(builds):
     """Scale-critical physical properties of the r4 operators."""
     # deterministic shuffle must never funnel through one partition —
     # the shard key exists precisely to parallelize the rank window
-    assert "SinglePartition" not in plans["q_shuffle_shard"]
+    assert "SinglePartition" not in builds["q_shuffle_shard"].plan
     # boilerplate: the common-gram table is small by construction and
     # must reach the positions join as a broadcast
-    assert "BroadcastHashJoin" in plans["q_text_boilerplate"]
+    assert "BroadcastHashJoin" in builds["q_text_boilerplate"].plan
     # kNN graph: the pair fold and per-node top-k run in one grouped-
     # pandas task per label block, over exactly one label shuffle
-    knn = plans["q_embed_knn"]
+    knn = builds["q_embed_knn"].plan
     tree = knn.split("== Physical Plan ==")[-1].split("(1) ")[0]
     assert tree.count("FlatMapGroupsInPandas") == 1, tree
     assert tree.count("Exchange") == 1, tree
@@ -516,57 +498,57 @@ def test_r4_operator_plan_shapes(plans):
     assert "NestedLoop" not in knn and "Cartesian" not in knn
     # count-min: the 256-row sketch broadcasts; top-10 is a heap, not a
     # global sort
-    cm = plans["q_agg_count_min"]
+    cm = builds["q_agg_count_min"].plan
     assert "BroadcastHashJoin" in cm
     assert "TakeOrderedAndProject" in cm
     # event paths: lag window and transition agg — map-side combine
     # bounds the second exchange to |types|^2 rows
-    assert "Window" in plans["q_event_paths"]
+    assert "Window" in builds["q_event_paths"].plan
     # pure range join: banding must turn the inequality join into a
     # hash join on the bucket id — a nested loop here is the exact
     # quadratic shape the operator exists to avoid
-    rb = plans["q_join_range_banded"]
+    rb = builds["q_join_range_banded"].plan
     assert "NestedLoop" not in rb and "Cartesian" not in rb
     # concurrency: the boundary running sum must be day-partitioned
     # (the only SinglePartition window allowed is the tiny day-offsets
     # table, asserted via the allowlist)
-    assert "hashpartitioning" in plans["q_concurrency"]
+    assert "hashpartitioning" in builds["q_concurrency"].plan
 
 
-def test_tpch_suite_plan_shapes(plans):
+def test_tpch_suite_plan_shapes(builds):
     """Pin the scale-critical properties of the classic-OLAP suite."""
     # Q18: the per-order quantity agg feeds the joins directly — one
     # lineitem scan total, never the IN-subquery double scan
-    assert plans["q_tpch_q18"].count("lineitem.parquet") == 1
+    assert builds["q_tpch_q18"].plan.count("lineitem.parquet") == 1
     # Q3 / Q10 / Q18: top-k lowers to per-partition heaps, no global sort
     for k in ("q_tpch_q3", "q_tpch_q10", "q_tpch_q18"):
-        assert "TakeOrderedAndProject" in plans[k], k
+        assert "TakeOrderedAndProject" in builds[k].plan, k
     # Q5: constant-size dims (nation x region) reach the facts as a
     # broadcast; the segment/date filters reach their parquet scans
-    assert "BroadcastHashJoin" in plans["q_tpch_q5"]
+    assert "BroadcastHashJoin" in builds["q_tpch_q5"].plan
     for k in ("q_tpch_q3", "q_tpch_q5", "q_tpch_q10"):
-        assert "PushedFilters: [IsNotNull" in plans[k], k
+        assert "PushedFilters: [IsNotNull" in builds[k].plan, k
     # Q6: all four predicates reach the lineitem scan (the pushdown
     # probe) — date, discount band, and quantity all appear as pushed
     # parquet filters, and only 3 data columns are read
-    q6 = plans["q_tpch_q6"]
+    q6 = builds["q_tpch_q6"].plan
     for frag in ("l_shipdate", "l_discount", "l_quantity"):
         assert f"PushedFilters: [IsNotNull({frag})" in q6 or frag in q6.split(
             "PushedFilters"
         )[1].split("]")[0], frag
     # Q4: EXISTS lowers to a LEFT SEMI join (no DISTINCT repair pass)
-    assert "LeftSemi" in plans["q_tpch_q4"]
+    assert "LeftSemi" in builds["q_tpch_q4"].plan
     # Q22: NOT EXISTS lowers to a LEFT ANTI join
-    assert "LeftAnti" in plans["q_tpch_q22"]
+    assert "LeftAnti" in builds["q_tpch_q22"].plan
     # Q19: the hand-factored per-side disjunctions reach BOTH scans
-    q19 = plans["q_tpch_q19"]
+    q19 = builds["q_tpch_q19"].plan
     assert "Or(EqualTo(p_brand" in q19 or "p_brand" in q19  # part side pushed
     # Q7: no OR survives into any join condition — joins are pure
     # equi-joins (hash/broadcast), the residual is a post-join filter
-    assert "BroadcastNestedLoopJoin" not in plans["q_tpch_q7"]
+    assert "BroadcastNestedLoopJoin" not in builds["q_tpch_q7"].plan
     # Q17: the decorrelated per-part average joins back on l_partkey —
     # no nested-loop, single pattern of partkey exchanges
-    assert "BroadcastNestedLoopJoin" not in plans["q_tpch_q17"]
+    assert "BroadcastNestedLoopJoin" not in builds["q_tpch_q17"].plan
 
 
 def test_aqe_splits_skewed_join_partition(spark):
@@ -612,104 +594,104 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.set(k, v)
 
 
-def test_tpch_completion_plan_shapes(plans):
+def test_tpch_completion_plan_shapes(builds):
     """Pin the scale-critical properties of the round-4 TPC-H
     completion set (Q2 Q8 Q9 Q11 Q12 Q13 Q16 Q20 Q21)."""
     # Q2: the per-part min is a WINDOW over the bridge aggregate — one
     # lineitem scan total, no join-back second scan; the European
     # dimension chain broadcasts
-    assert plans["q_tpch_q2"].count("lineitem.parquet") == 1
-    assert "BroadcastHashJoin" in plans["q_tpch_q2"]
-    assert "TakeOrderedAndProject" in plans["q_tpch_q2"]
+    assert builds["q_tpch_q2"].plan.count("lineitem.parquet") == 1
+    assert "BroadcastHashJoin" in builds["q_tpch_q2"].plan
+    assert "TakeOrderedAndProject" in builds["q_tpch_q2"].plan
     # Q8 / Q9: dimension chains reach the facts as broadcasts; the
     # part-side filter reaches its parquet scan
     for k in ("q_tpch_q8", "q_tpch_q9"):
-        assert "BroadcastHashJoin" in plans[k], k
-    assert "p_type" in plans["q_tpch_q8"].split("PushedFilters", 1)[1].split("]")[0] \
-        or "PushedFilters: [IsNotNull(p_type)" in plans["q_tpch_q8"]
+        assert "BroadcastHashJoin" in builds[k].plan, k
+    assert "p_type" in builds["q_tpch_q8"].plan.split("PushedFilters", 1)[1].split("]")[0] \
+        or "PushedFilters: [IsNotNull(p_type)" in builds["q_tpch_q8"].plan
     # Q9: the LIKE filter is pushed as a StringContains on the part scan
-    assert "widget" in plans["q_tpch_q9"]
+    assert "widget" in builds["q_tpch_q9"].plan
     # Q11: the localCheckpoint-ed value table replaces the fact scan in
     # BOTH branches of the action plan — lineitem was scanned exactly
     # once when the checkpoint materialized, so the plan shows zero
     # parquet scans and a shared materialized-RDD scan instead
-    assert plans["q_tpch_q11"].count("lineitem.parquet") == 0
-    assert "ExistingRDD" in plans["q_tpch_q11"]
+    assert builds["q_tpch_q11"].plan.count("lineitem.parquet") == 0
+    assert "ExistingRDD" in builds["q_tpch_q11"].plan
     # Q13: the priority filter stays in the LEFT join condition (zero-
     # order customers survive), so no customer-side filter exists
-    assert "LeftOuter" in plans["q_tpch_q13"]
+    assert "LeftOuter" in builds["q_tpch_q13"].plan
     # Q16: the excluded-supplier NOT IN lowers to a broadcast anti join
-    assert "LeftAnti" in plans["q_tpch_q16"]
+    assert "LeftAnti" in builds["q_tpch_q16"].plan
     # Q20: the IN-chain stays semi end-to-end — no duplicate suppliers
     # ever materialize
-    assert plans["q_tpch_q20"].count("LeftSemi") >= 2
+    assert builds["q_tpch_q20"].plan.count("LeftSemi") >= 2
     # Q21: the EXISTS/NOT-EXISTS pair decorrelates into ONE lineitem
     # scan + per-order window (classic form scans lineitem 3x)
-    assert plans["q_tpch_q21"].count("lineitem.parquet") == 1
-    assert "Window" in plans["q_tpch_q21"]
+    assert builds["q_tpch_q21"].plan.count("lineitem.parquet") == 1
+    assert "Window" in builds["q_tpch_q21"].plan
 
 
-def test_tpch_scalar_subqueries_scan_fact_once(plans):
+def test_tpch_scalar_subqueries_scan_fact_once(builds):
     """Q15's revenue view and Q11's value view each feed two plan
     branches (candidate rows + a 1-row scalar); the localCheckpoint
     must collapse them to ONE lineitem scan — which happens when the
     checkpoint materializes, leaving the action plan reading the
     materialized RDD and no parquet fact scan at all."""
-    assert plans["q_tpch_q15"].count("lineitem.parquet") == 0
-    assert "ExistingRDD" in plans["q_tpch_q15"]
+    assert builds["q_tpch_q15"].plan.count("lineitem.parquet") == 0
+    assert "ExistingRDD" in builds["q_tpch_q15"].plan
 
 
-def test_late_r4_operator_plan_shapes(plans):
+def test_late_r4_operator_plan_shapes(builds):
     """Scale-critical plan pins for the late round-4 block."""
     # session paths: ONE user_id exchange serves sessionization, the
     # row_number cut, and the per-session collect (hashpartitioning on
     # user_id satisfies the (user_id, sid) clustering); only the final
     # path count re-shuffles
-    sp = plans["q_session_paths"]
+    sp = builds["q_session_paths"].plan
     assert sp.count("Exchange (") == 2
     assert "TakeOrderedAndProject" in sp
     # rolling active users: NO window function anywhere — the sliding
     # count-distinct is the contribution-day explode + hash agg
-    assert "Window" not in plans["q_rolling_active_users"]
+    assert "Window" not in builds["q_rolling_active_users"].plan
     # ABC: the parts-sized table sees only band-partitioned windows;
     # the single-partition stage exists only for the <=64-row band
     # totals (documented); the final class agg is a plain hash agg
-    assert "hashpartitioning(_band" in plans["q_abc_pareto"]
+    assert "hashpartitioning(_band" in builds["q_abc_pareto"].plan
     # AUC: banded rank prefix — band-partitioned window over the
     # score-group table, carry joined back as a broadcast
-    auc = plans["q_eval_auc"]
+    auc = builds["q_eval_auc"].plan
     assert "hashpartitioning(_band" in auc
     assert "BroadcastHashJoin" in auc
     # bloom join: the probe-side filter contains the bit-test BEFORE
     # the equi join (the pre-exchange prune), and the final join is a
     # hash join on the order key
-    bl = plans["q_join_bloom"]
+    bl = builds["q_join_bloom"].plan
     assert "shiftleft" in bl and "element_at" in bl
     # overlap: the self-join is an equi hash join on user_id with the
     # type inequality as a riding condition — no nested loop
-    assert "BroadcastNestedLoopJoin" not in plans["q_user_overlap"]
+    assert "BroadcastNestedLoopJoin" not in builds["q_user_overlap"].plan
     # interpolation: both carry directions share one exchange+sort
-    ri = plans["q_resample_interpolate"]
+    ri = builds["q_resample_interpolate"].plan
     assert ri.count("Exchange (") <= 2  # user_id + (possibly AQE final)
 
 
-def test_r5_operator_plan_shapes(plans):
+def test_r5_operator_plan_shapes(builds):
     """Scale-critical plan pins for the round-5 rewrites."""
     # RFM: the r5 rewrite removed every global ntile — the customer
     # table sees only band-partitioned windows (the banded global-rank
     # scheme); the carry tables come back as broadcasts
-    rfm = plans["q_rfm_segments"]
+    rfm = builds["q_rfm_segments"].plan
     assert "ntile" not in rfm, "RFM regressed to global ntile windows"
     assert "hashpartitioning(_band" in rfm
     assert "BroadcastHashJoin" in rfm
     # pairwise similarity: the self-join key must carry the salt (hot-
     # label flattening) and stay an equi hash join — never nested-loop
-    sp = plans["q_sim_pairwise"]
+    sp = builds["q_sim_pairwise"].plan
     assert "salt" in sp, "pairwise join lost its salt key"
     assert "BroadcastNestedLoopJoin" not in sp and "CartesianProduct" not in sp
     # PCA projection: after the moment partials run, the returned plan
     # is the map-only codegen projection — no Exchange, no Python
-    pca = plans["q_embed_pca"]
+    pca = builds["q_embed_pca"].plan
     assert "Exchange" not in pca, "PCA projection should be map-only"
 
 

@@ -146,7 +146,7 @@ def test_oracle_keys_subset_and_aliased():
         assert "SELECT" in sql.upper(), k
 
 
-def test_no_complex_output_on_oracle_keys(spark):
+def test_no_complex_output_on_oracle_keys(builds):
     """Driver canonicalizer contract: oracle-checked keys must not emit
     Array/Map/Struct columns. The driver pandas-lexsorts raw cells and
     crashes on unhashable ndarray cells (q_embed_quantize's r04 ERR —
@@ -158,21 +158,19 @@ def test_no_complex_output_on_oracle_keys(spark):
     tools/check.py complex_cols gate instead."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import STREAM_PREFIX
 
-    qs, os_ = all_queries(), all_oracles()
     bad = []
-    for k in os_:
-        if k.startswith("q_stream"):
+    for k in all_oracles():
+        if k.startswith(STREAM_PREFIX):
             continue
-        schema = qs[k](spark, SF_SMOKE).schema
-        for f in schema.fields:
+        for f in builds[k].schema.fields:
             if isinstance(f.dataType, (ArrayType, MapType, StructType)):
                 bad.append((k, f.name, f.dataType.simpleString()))
     assert not bad, f"oracle-checked keys with driver-unhashable columns: {bad}"
 
 
-def test_no_decimal_output_on_oracle_keys(spark):
+def test_no_decimal_output_on_oracle_keys(builds):
     """Driver canonicalizer contract #2 (q_sql_api's r05 hash-FAIL):
     Spark parses every exact-numeric literal as DECIMAL, so a shared
     SQL text with ``x / 100.0`` returns Decimal cells on the Spark
@@ -184,15 +182,13 @@ def test_no_decimal_output_on_oracle_keys(spark):
     dynamic mirror (covers streaming keys + DuckDB-side decimals)."""
     from pyspark.sql.types import DecimalType
 
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import STREAM_PREFIX
 
-    qs, os_ = all_queries(), all_oracles()
     bad = []
-    for k in os_:
-        if k.startswith("q_stream"):
+    for k in all_oracles():
+        if k.startswith(STREAM_PREFIX):
             continue
-        schema = qs[k](spark, SF_SMOKE).schema
-        for f in schema.fields:
+        for f in builds[k].schema.fields:
             if isinstance(f.dataType, DecimalType):
                 bad.append((k, f.name, f.dataType.simpleString()))
     assert not bad, f"oracle-checked keys with Decimal output columns: {bad}"
